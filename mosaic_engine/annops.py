@@ -116,7 +116,7 @@ def _cosine_topk_arrow(cand: DataFrame, k: int) -> DataFrame:
     fails loud (dimension mismatch), matching dot_long/IVF."""
     from pyspark.sql import types as T
 
-    from .ops import _rank_keep_mask
+    from .ops import _rank_keep_mask, _topk_tail
 
     src = cand.select("query_id", "vec_id", "q", "norm2", "qq", "qn2")
     in_f = {f.name: f.dataType for f in src.schema.fields}
@@ -187,22 +187,11 @@ def _cosine_topk_arrow(cand: DataFrame, k: int) -> DataFrame:
             ]
         ),
     )
-    topk = pruned.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("ns"), F.col("vec_id")))
-            ),
-            1,
-            k,
-        ).alias("nn")
-    )
-    return topk.select(
-        "query_id", F.posexplode("nn").alias("pos", "nn")
-    ).select(
+    return _topk_tail(pruned, ["query_id"], ["ns", "vec_id"], k).select(
         "query_id",
-        (F.col("pos") + 1).alias("rank"),
-        F.col("nn.vec_id").alias("neighbor_id"),
-        (-F.col("nn.ns")).alias("score"),
+        "rank",
+        F.col("vec_id").alias("neighbor_id"),
+        (-F.col("ns")).alias("score"),
     )
 
 

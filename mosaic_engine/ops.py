@@ -22,10 +22,9 @@ Design notes (scale-first, SURVEY.md §4):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from . import udfs
@@ -34,12 +33,6 @@ DEFAULT_SALT_BUCKETS = 16
 # above this probe count the kNN scoring join stops force-broadcasting
 # the (probe, cell) candidate table (see knn_join)
 KNN_PROBE_BROADCAST_LIMIT = 50_000
-# introspection hook: when MOSAIC_KNN_DEBUG=1, knn_join drops its
-# (pruned candidate, scoring join) DataFrames here so plan/volume
-# diagnostics need no replumbing. Off by default — the hook would
-# otherwise pin the last call's full plan lineage in module scope for
-# the life of the process.
-_KNN_DEBUG: dict = {}
 
 SEASON_MONTHS = {
     "winter": (12, 1, 2),
@@ -341,7 +334,7 @@ class KnnIndex:
 
     level: int
     cent: DataFrame  # (image_id, slon, slat, cell, scell)
-    stats: DataFrame  # (cell, n_in_cell, cw, cs, ce, cn), checkpointed
+    stats: DataFrame  # (cell, n_in_cell), checkpointed
     # lazily-filled _cascade_prep result (bounded numpy rollups/CSRs
     # for the in-kernel coarse cascade): repeated serve batches reuse
     # one driver-side collect instead of re-aggregating per batch
@@ -382,30 +375,6 @@ def _tile_xy_cols(lon: Column, lat: Column, level: int) -> tuple[Column, Column]
         clamp(F.floor(xn * z2).cast("long")),
         clamp(F.floor(yn * z2).cast("long")),
     )
-
-
-def _cell_rect_cols(key: str, zoom: int) -> list[Column]:
-    """Native inverse: (x<<30)|y key at `zoom` → rect columns
-    (cw, cs, ce, cn) via the mercator gudermannian. The top/bottom
-    tile rows also receive points whose centroid lat exceeds the
-    mercator clamp (±85.05..), so those rects stretch to the poles
-    — every point mapped into a cell must lie INSIDE its rect or
-    maxd is not a valid upper bound and pruning goes wrong."""
-    import math
-
-    zz = float(1 << zoom)
-    nm = (1 << zoom) - 1
-    x = F.shiftright(F.col(key), 30)
-    y = F.col(key) - F.shiftleft(x, 30)
-    merc = lambda yy: F.degrees(  # noqa: E731
-        F.atan(F.sinh(math.pi * (1.0 - 2.0 * yy / zz)))
-    )
-    return [
-        (x / zz * 360.0 - 180.0).alias("cw"),
-        F.when(y == nm, F.lit(-90.0)).otherwise(merc(y + 1)).alias("cs"),
-        ((x + 1) / zz * 360.0 - 180.0).alias("ce"),
-        F.when(y == 0, F.lit(90.0)).otherwise(merc(y)).alias("cn"),
-    ]
 
 
 def _scene_centroids(scenes: DataFrame) -> DataFrame:
@@ -521,8 +490,7 @@ def knn_index(
                 if rw_by_lv.get(level, 0.0) <= 2.0 * target:
                     break
                 level += 1
-        # final stats by rollup — no second corpus-wide aggregation;
-        # rect columns derive from the key alone
+        # final stats by rollup — no second corpus-wide aggregation
         stats = (
             fine.groupBy(
                 _parent_cell_col(
@@ -530,14 +498,12 @@ def knn_index(
                 ).alias("cell")
             )
             .agg(F.sum("n").alias("n_in_cell"))
-            .select("cell", "n_in_cell", *_cell_rect_cols("cell", level))
             .localCheckpoint(eager=True)
         )
     else:
         stats = (
             cent.groupBy(key_at(level).alias("cell"))
             .agg(F.count("*").alias("n_in_cell"))
-            .select("cell", "n_in_cell", *_cell_rect_cols("cell", level))
             # stats is bounded (≤ 4^level rows) but its lineage scans
             # the whole corpus; several downstream branches reference
             # it, so materialize the small result once in executor
@@ -679,17 +645,14 @@ def knn_index_load(spark, path: str) -> KnnIndex:
     return idx
 
 
-# ---- numpy twins of the cascade bound math (r6): the coarse cascade
-# stages moved from DataFrame cross-join + window-sort into ONE
-# Arrow-batched mapInPandas kernel (see knn_join docstring).
-# _cell_rect_np/_bounds_np mirror _with_bounds/_cell_rect_cols
-# op-for-op (they remain the meter-space oracle the bracket pytest
-# checks); the kernel itself runs the r7 fast path (_bounds_fast_np):
-# identical mathematical bounds in haversine-argument space over
-# per-cell precomputed trig. Pruning EXACTNESS does not require
-# bit-equality between any of these (any valid lower/upper bound
-# preserves the R* guarantee — the margins absorb FP drift either
-# way).
+# ---- the kNN bound kernel: every R* pruning step in knn_join — the
+# in-kernel coarse cascade (_make_cascade_prune) and the distributed
+# fine refinement past FINE_COLLECT_ROWS (_make_fine_refine) — derives
+# per-cell trig with _cell_attrs_np, brackets each (probe, cell) pair
+# in haversine-argument space with _bounds_fast_np and keeps the
+# survivors of the per-probe R* rule with _rstar_np. Pruning EXACTNESS
+# needs only valid lower/upper bounds (the margins absorb FP drift):
+# final scoring is exact over any candidate superset.
 FINE_COLLECT_ROWS = 300_000  # cap for collecting fine stats driver-side
 # in-kernel refinement step: 1 level (4 children/parent). r6 used 2
 # (16 children); the 16× expansion made the mid-chain pair tables the
@@ -710,8 +673,11 @@ def _parent_np(cells: "np.ndarray", drop: int) -> "np.ndarray":
 
 
 def _cell_rect_np(cells: "np.ndarray", level: int):
-    """(cw, cs, ce, cn) of packed keys at `level` (twin of
-    _cell_rect_cols, incl. the pole-stretched edge rows)."""
+    """(cw, cs, ce, cn) of packed keys at `level`. The top/bottom
+    tile rows also receive points whose centroid lat exceeds the
+    mercator clamp (±85.05..), so those rects stretch to the poles —
+    every point mapped into a cell must lie INSIDE its rect or the
+    upper bound is not valid and pruning goes wrong."""
     import math
 
     import numpy as np
@@ -731,77 +697,16 @@ def _cell_rect_np(cells: "np.ndarray", level: int):
     return cw, cs, ce, cn
 
 
-def _bounds_np(lon, lat, cw, cs, ce, cn):
-    """(mind, maxd) twin of _with_bounds. np.fmin mirrors Spark
-    least()'s NaN-last ordering at the cos(Δλ)=0 stationary point (the
-    two edge-latitude candidates are always finite).
-
-    maxd is the EXACT max distance from the probe to any point of the
-    rect (r6; previously mind + a perimeter-sum "diameter", ~2× slack
-    at mid-latitudes): distance is monotone in Δλ ∈ [0, 180], so the
-    max sits at Δλ_max (180 when the probe's antimeridian falls inside
-    the cell, else the farther lon edge), and over φ the same
-    stationary-latitude family as the min — tan φ* = tan φ_p /
-    cos Δλ_max, clamped to the cell — but taking the MAX of the
-    stationary and the two edge-latitude candidates (np.fmax: NaN at
-    the cos Δλ_max = 0 pole sorts last, finite edges always present).
-    A tighter maxd shrinks R* and therefore every cascade level's
-    survivor set AND the scored candidate join — pruning stays exact
-    (maxd still upper-bounds every scene in the cell)."""
-    import numpy as np
-
-    def wrapdeg(a, b):
-        return np.abs((a - b + 540.0) % 360.0 - 180.0)
-
-    inside = (lon >= cw) & (lon <= ce)
-    dl = np.where(inside, 0.0, np.minimum(wrapdeg(lon, cw), wrapdeg(lon, ce)))
-    DL = np.radians(dl)
-    p1 = np.radians(lat)
-    s_r = np.radians(cs)
-    n_r = np.radians(cn)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        phi_star = np.arctan(np.tan(p1) / np.cos(DL))
-    phi_c = np.maximum(np.minimum(phi_star, n_r), s_r)
-
-    def hav(pa_, pb_, dlam):
-        a = (
-            np.sin((pb_ - pa_) / 2.0) ** 2
-            + np.cos(pa_) * np.cos(pb_) * np.sin(dlam / 2.0) ** 2
-        )
-        return 2.0 * EARTH_R_M * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
-
-    with np.errstate(invalid="ignore"):
-        mind_raw = np.fmin(
-            np.fmin(hav(p1, phi_c, DL), hav(p1, s_r, DL)), hav(p1, n_r, DL)
-        )
-    # probe antimeridian in [-180, 180): lon + 180 wrapped. A cell can
-    # hold it only strictly interior (no cell's interior crosses ±180);
-    # when it coincides with a cell EDGE the edge wrapdeg is 180
-    # anyway, so one representation suffices.
-    anti = (lon + 360.0) % 360.0 - 180.0
-    anti_in = (anti >= cw) & (anti <= ce)
-    dl_max = np.where(
-        anti_in, 180.0, np.maximum(wrapdeg(lon, cw), wrapdeg(lon, ce))
-    )
-    DLX = np.radians(dl_max)
-    with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-        phi_star_x = np.arctan(np.tan(p1) / np.cos(DLX))
-    phi_cx = np.maximum(np.minimum(phi_star_x, n_r), s_r)
-    with np.errstate(invalid="ignore"):
-        maxd_raw = np.fmax(
-            np.fmax(hav(p1, phi_cx, DLX), hav(p1, s_r, DLX)),
-            hav(p1, n_r, DLX),
-        )
-    return mind_raw * (1.0 - 1e-9) - 1e-3, maxd_raw * (1.0 + 1e-9) + 1e-3
-
-
 def _cell_attrs_np(cells: "np.ndarray", level: int):
     """Per-cell trig attributes for the fast a-space bounds
     (_bounds_fast_np): lon edges in degrees plus sin/cos of the
-    latitude edges. Computed ONCE per unique cell in _cascade_prep —
-    the r6 kernel recomputed the rect AND ~40 transcendentals per
-    (probe, cell) PAIR per level, measured as ~85% of the kernel's
-    13.4 s single-core wall at 100k probes."""
+    latitude edges. The cascade computes them ONCE per unique cell in
+    _cascade_prep — the r6 kernel recomputed the rect AND ~40
+    transcendentals per (probe, cell) PAIR per level, measured as ~85%
+    of the kernel's 13.4 s single-core wall at 100k probes. The fine
+    refinement takes them per pair row: its rows come from a
+    distributed join, one bound step each, and its per-cell dim is
+    the one too big to collect."""
     import numpy as np
 
     cw, cs, ce, cn = _cell_rect_np(cells, level)
@@ -817,12 +722,19 @@ def _cell_attrs_np(cells: "np.ndarray", level: int):
     )
 
 
-def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
+def _bounds_fast_np(lon, sin_p, cos_p, tan_p, attrs):
     """(a_lo, a_hi) bounds in HAVERSINE-ARGUMENT space (the monotone
     a = sin²(Δφ/2) + cosφ₁cosφ₂sin²(Δλ/2) of the great-circle
-    distance) — the same mathematical min/max rect bounds as
-    _bounds_np, reformulated so the per-pair work is two sin() calls
-    plus algebra over per-cell/per-probe precomputed trig:
+    distance) on the min/max distance from a probe to any point of a
+    cell rect. The min sits at the nearer lon edge (Δλ = 0 when the
+    probe's lon is inside the cell) over the stationary latitude
+    φ* = atan(tanφ_p / cosΔλ) clamped to the cell and the two edge
+    latitudes; the max is EXACT too: distance is monotone in
+    Δλ ∈ [0, 180], so it sits at Δλ_max (180 when the probe's
+    antimeridian falls inside the cell, else the farther lon edge)
+    over the same latitude family, taking the max. The per-pair work
+    is two sin() calls plus algebra over per-cell/per-probe
+    precomputed trig:
 
       * sin²(Δφ/2) = (1 − (cosφ₁cosφ₂ + sinφ₁sinφ₂))/2 — products of
         precomputed values, no per-pair transcendental;
@@ -842,9 +754,8 @@ def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
     cancellation in (1−cosΔφ)/2 is bounded by the term errors, not
     amplified), so 1e-9 relative + 1e-14 absolute keeps ≥10× slack —
     a_lo never exceeds the true min, a_hi never undercuts the true
-    max, which is all R* exactness needs (bit-equality with the JVM
-    twin was never required; any valid bracket preserves the
-    superset)."""
+    max, which is all R* exactness needs (any valid bracket preserves
+    the superset)."""
     import numpy as np
 
     cw, ce, sin_s, cos_s, sin_n, cos_n = attrs
@@ -904,10 +815,11 @@ def _bounds_fast_np(lon, lat, sin_p, cos_p, tan_p, attrs):
 
 
 def _rstar_np(pid, mind, maxd, n, kreq_row):
-    """Surviving pair indices under the per-probe R* rule (twin of
-    _rstar_filter): order each probe's cells by maxd, R* = smallest
-    maxd whose running count reaches k, keep mind <= R* (all cells
-    kept when the corpus never reaches k — R* stays +inf)."""
+    """Surviving pair indices under the per-probe R* rule: order each
+    probe's cells by maxd, R* = smallest maxd whose running count
+    reaches k — ≥ k scenes provably lie within R* — and keep
+    mind <= R* (all cells kept when the corpus never reaches k — R*
+    stays +inf)."""
     import numpy as np
 
     if len(pid) == 0:
@@ -1070,8 +982,7 @@ def _make_cascade_prune(bc, out_cols: list[str]):
             attrs = tuple(np.tile(a, P) for a in attrs0)
             for i, lv in enumerate(chain):
                 a_lo, a_hi = _bounds_fast_np(
-                    lon[pid], lat[pid],
-                    sin_pb[pid], cos_pb[pid], tan_pb[pid], attrs,
+                    lon[pid], sin_pb[pid], cos_pb[pid], tan_pb[pid], attrs
                 )
                 keep = _rstar_np(pid, a_lo, a_hi, nn, kreq[pid])
                 pid, cell = pid[keep], cell[keep]
@@ -1096,6 +1007,64 @@ def _make_cascade_prune(bc, out_cols: list[str]):
             yield pd.DataFrame({c: out[c] for c in out_cols})
 
     return prune
+
+
+def _make_fine_refine(level: int, out_cols: list[str]):
+    """mapInArrow closure for the fine refinement below the kernel's
+    descent cap: each input row is one (probe, level-`level` cell)
+    pair of the distributed pcell join, carrying the cell's
+    n_in_cell, with every probe's rows contiguous (query_id-partitioned
+    and sorted). Per batch it brackets each pair with _bounds_fast_np
+    over _cell_attrs_np and keeps the R* survivors (_rstar_np). The
+    trailing probe's rows may continue in the next batch, so they are
+    carried over: memory stays one batch plus one probe's pairs."""
+
+    def refine(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        def probe_starts(t):
+            # True where a new probe's rows begin (nulls never merge)
+            n = t.num_rows
+            new = np.ones(n, dtype=bool)
+            if n > 1:
+                qid = t.column("query_id")
+                ne = pc.not_equal(qid.slice(1), qid.slice(0, n - 1))
+                new[1:] = pc.fill_null(ne, True).to_numpy()
+            return new
+
+        def survivors(t, new):
+            t = t.combine_chunks()
+            p1 = np.radians(t.column("lat").to_numpy())
+            sin_p, cos_p = np.sin(p1), np.cos(p1)
+            a_lo, a_hi = _bounds_fast_np(
+                t.column("lon").to_numpy(), sin_p, cos_p, sin_p / cos_p,
+                _cell_attrs_np(t.column("cell").to_numpy(), level),
+            )
+            keep = _rstar_np(
+                np.cumsum(new) - 1, a_lo, a_hi,
+                t.column("n_in_cell").to_numpy(),
+                t.column("k_req").to_numpy(),
+            )
+            return t.select(out_cols).take(pa.array(keep)).to_batches()
+
+        carry = None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            t = pa.Table.from_batches([rb])
+            if carry is not None:
+                t = pa.concat_tables([carry, t])
+            new = probe_starts(t)
+            tail = int(np.flatnonzero(new)[-1])
+            if tail:
+                yield from survivors(t.slice(0, tail), new[:tail])
+            carry = t.slice(tail)
+        if carry is not None:
+            yield from survivors(carry, probe_starts(carry))
+
+    return refine
 
 
 def _rank_keep_mask(qid, dist, gk):
@@ -1128,6 +1097,22 @@ def _rank_keep_mask(qid, dist, gk):
     return keep
 
 
+def _topk_tail(df: DataFrame, keys: list[str], order: list[str], k) -> DataFrame:
+    """Exact top-k rows per key, the final step every top-k path ends
+    with: collect_list(struct(order)) → sort_array → slice to k →
+    posexplode. `order` starts with the ranking measure and ends with
+    a total tiebreak; `k` is an int or an int Column (per-key k).
+    Returns keys + rank (int, 1-based) + the order columns."""
+    nn = F.slice(F.sort_array(F.collect_list(F.struct(*order))), 1, k)
+    out = df.groupBy(*keys).agg(nn.alias("nn"))
+    out = out.select(*keys, F.posexplode("nn").alias("pos", "nn"))
+    return out.select(
+        *keys,
+        (F.col("pos") + 1).cast("int").alias("rank"),
+        *[F.col(f"nn.{c}").alias(c) for c in order],
+    )
+
+
 # expansion chunk for the union-score kernel: bound the in-flight
 # (pair-expanded) arrays per task regardless of how many candidate
 # rows a partition holds
@@ -1144,16 +1129,16 @@ UNION_SCORE_CHUNK = 4_000_000
 UNION_SCORE_PARENT_DROP = 2
 
 
-def _make_union_score(gk: int):
+def _make_union_score():
     """mapInArrow closure for knn_join's bulk scoring path: one
     cell-hashed partition holds BOTH the corpus members (side=0: cell,
     image_id, slon, slat) and the probe candidates (side=1: cell,
     query_id, plon, plat, k_req) for its cells; the kernel equi-joins
     them in numpy (sort members by cell + searchsorted ranges), scores
     with the identical haversine kernel the brute oracle path uses,
-    and emits only the per-task rank<gk superset — the JVM boundary
+    and emits only the per-task rank<k_req superset — the JVM boundary
     carries each input row once instead of the joined blow-up, and the
-    final exact aggregation receives ≤ queries-in-task × gk rows.
+    final exact aggregation receives ≤ queries-in-task × k_req rows.
     Pair expansion runs in bounded chunks with the same
     doubling-compaction idea as _score_partial."""
 
@@ -1279,40 +1264,35 @@ def knn_join(
     One-pass cell-stats pruning — no iteration, no driver-side loop:
 
       1. Scene centroids key to web-mercator cells at ``level``; a tiny
-         per-cell stats dim (count + exact tile bounds) is derived with
-         one groupBy. Nonempty cells are bounded by corpus geometry
-         (≤ 4^level), so the stats side broadcasts.
-      2. probes × stats: per pair, a provable LOWER bound on the
-         distance from the probe to anywhere in the cell rect (wrapped
-         lon clamp; the candidate latitudes on a meridian edge are its
-         endpoints plus the stationary point atan(tan(lat)/cos(Δλ)) —
-         the min over those is the exact point-to-spherical-rect
-         distance) and an UPPER bound (lower bound + meridian+parallel
-         traversal of the rect; triangle inequality).
-      3. per probe, R* = the smallest upper bound whose running scene
+         per-cell stats dim (cell, n_in_cell) is derived with one
+         groupBy. Nonempty cells are bounded by corpus geometry
+         (≤ 4^level); the cell rects derive from the key alone.
+      2. One bound kernel brackets every (probe, cell) pair:
+         _bounds_fast_np gives a provable LOWER and the exact UPPER
+         bound on the distance from the probe to any point of the cell
+         rect, in haversine-argument space over per-cell trig
+         (_cell_attrs_np). 1e-9-relative + 1e-14-absolute margins
+         absorb FP drift, so pruning never excludes a true neighbor.
+      3. Per probe, R* = the smallest upper bound whose running scene
          count reaches k (cells ordered by upper bound): ≥ k scenes
          provably lie within R*, so any cell whose lower bound exceeds
-         R* cannot contain a top-k scene and is pruned. Out-of-extent
-         probes therefore touch only the corpus-edge cells — there is
-         no full-scan fallback.
-      4. surviving (probe, cell) pairs equi-join scenes on cell (probe
-         side broadcast — bounded by |queries| × selected cells); exact
-         haversine (the same Arrow kernel as knn_bruteforce) + (dist,
-         image_id) total-order top-k, pre-reduced per (probe, cell) so
-         no hotspot cell concentrates in a single final-agg key.
+         R* cannot contain a top-k scene and is pruned (_rstar_np).
+         Out-of-extent probes therefore touch only the corpus-edge
+         cells — there is no full-scan fallback.
+      4. Surviving (probe, cell) pairs equi-join scenes on cell; exact
+         haversine (the same numpy kernel as the brute-force paths),
+         pre-reduced per task to the rank<k superset, then one (dist,
+         image_id) total-order top-k.
 
-    Millimeter/1e-9-relative margins on both bounds absorb JVM-vs-numpy
-    trig ULP drift, so the pruning never excludes a true neighbor.
-    Stage 2's |probes| × |cells| pair table is the scaling knob: the
-    SAME pruning runs as a coarse-to-fine walk (2-level steps from
-    level 3/4 down) INSIDE one Arrow-batched mapInPandas kernel over
-    bounded rollups of the stats dim — exact at every step (parent
-    rects contain their children and counts aggregate), and no
-    |probes| × |cells| table ever reaches a shuffle (r6; the r5
-    DataFrame-stage chain shuffled ~60 GB at 1M probes). The kernel
-    descends to `level` itself when the fine stats dim fits
-    FINE_COLLECT_ROWS, else to the 4^9-bounded level-9 rollup with a
-    distributed pcell equi-join refining the rest.
+    Steps 2–3 run as a coarse-to-fine walk — one level per step from
+    KNN_MIN_LEVEL down, exact at every step (parent rects contain
+    their children and counts aggregate) — INSIDE one Arrow-batched
+    mapInPandas kernel over bounded rollups of the stats dim, so no
+    |probes| × |cells| table ever reaches a shuffle. The walk descends
+    to `level` itself when the fine stats dim fits FINE_COLLECT_ROWS,
+    else to the 4^9-bounded level-9 rollup; the final level then runs
+    the same bound + R* step in a mapInArrow kernel over a distributed
+    pcell equi-join against the stats dim.
     """
     # element_at/slice ordinals must be INT (queries may carry k as long)
     kcol = (F.lit(k) if k is not None else F.col("k")).cast("int")
@@ -1359,190 +1339,84 @@ def knn_join(
         else (lambda df: df)
     )
 
-    # ---- distance bounds (all native trig → whole-stage codegen) ----
-    def _wrapdeg(a: Column, b: Column) -> Column:
-        # |a-b| wrapped into [0, 180] degrees
-        return F.abs(F.pmod(a - b + 540.0, F.lit(360.0)) - 180.0)
-
-    def _hav_m(phi_a: Column, phi_b: Column, dlam: Column) -> Column:
-        # haversine with lat/lon deltas already in radians
-        a = (
-            F.sin((phi_b - phi_a) / 2) * F.sin((phi_b - phi_a) / 2)
-            + F.cos(phi_a) * F.cos(phi_b) * F.sin(dlam / 2) * F.sin(dlam / 2)
-        )
-        return 2.0 * EARTH_R_M * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
-
-    def _with_bounds(pairs: DataFrame) -> DataFrame:
-        """Attach (mind, maxd) to a probes × cell-rect pair table with
-        (lon, lat, cw, cs, ce, cn) columns."""
-        inside_lon = (F.col("lon") >= F.col("cw")) & (
-            F.col("lon") <= F.col("ce")
-        )
-        dl = F.when(inside_lon, F.lit(0.0)).otherwise(
-            F.least(
-                _wrapdeg(F.col("lon"), F.col("cw")),
-                _wrapdeg(F.col("lon"), F.col("ce")),
-            )
-        )
-        DL = F.radians(dl)
-        p1 = F.radians(F.col("lat"))
-        s_r, n_r = F.radians(F.col("cs")), F.radians(F.col("cn"))
-        # stationary latitude of the point-to-meridian distance (NaN/Inf
-        # at cos(Δλ)=0 is harmless: Spark's least() sorts NaN last, and
-        # the two edge-latitude candidates are always evaluated)
-        phi_star = F.atan(F.tan(p1) / F.cos(DL))
-        phi_c = F.greatest(F.least(phi_star, n_r), s_r)
-        mind_raw = F.least(
-            _hav_m(p1, phi_c, DL), _hav_m(p1, s_r, DL), _hav_m(p1, n_r, DL)
-        )
-        # exact max distance to the rect (r6, twin of _bounds_np —
-        # replaces the perimeter-sum diameter bound): monotone in Δλ,
-        # so evaluate at Δλ_max (180 when the probe's antimeridian sits
-        # inside the cell) over the max-stationary latitude and the two
-        # edges. greatest() sorts NaN last like least(), and the edge
-        # candidates are always finite.
-        anti = F.pmod(F.col("lon") + 360.0, F.lit(360.0)) - 180.0
-        anti_in = (anti >= F.col("cw")) & (anti <= F.col("ce"))
-        dl_max = F.when(anti_in, F.lit(180.0)).otherwise(
-            F.greatest(
-                _wrapdeg(F.col("lon"), F.col("cw")),
-                _wrapdeg(F.col("lon"), F.col("ce")),
-            )
-        )
-        DLX = F.radians(dl_max)
-        phi_star_x = F.atan(F.tan(p1) / F.cos(DLX))
-        phi_cx = F.greatest(F.least(phi_star_x, n_r), s_r)
-        maxd_raw = F.greatest(
-            _hav_m(p1, phi_cx, DLX),
-            _hav_m(p1, s_r, DLX),
-            _hav_m(p1, n_r, DLX),
-        )
-        return pairs.withColumn(
-            "mind", mind_raw * (1.0 - 1e-9) - 1e-3
-        ).withColumn("maxd", maxd_raw * (1.0 + 1e-9) + 1e-3)
-
-    def _rstar_filter(pairs: DataFrame, key: str, keep: list[str]) -> DataFrame:
-        """Per-probe pruning radius R* (two windows over one partition —
-        no rejoin): keep cells whose lower bound can still hold a top-k
-        scene. Corpus smaller than k → R* null → keep every cell."""
-        wcum = (
-            Window.partitionBy("query_id")
-            .orderBy("maxd", key)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        wall = Window.partitionBy("query_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        cum = pairs.withColumn("cum", F.sum("n_in_cell").over(wcum))
-        rstar_col = F.min(
-            F.when(F.col("cum") >= F.col("k_req"), F.col("maxd"))
-        ).over(wall)
-        return (
-            cum.withColumn("rstar", rstar_col)
-            .filter(
-                F.col("mind")
-                <= F.coalesce(F.col("rstar"), F.lit(float("inf")))
-            )
-            .select(*keep)
-        )
-
-    # ---- coarse-to-fine prefilter CASCADE, in-kernel (r6 rework of
-    # the r5 DataFrame chain): the |probes| × |cells| pair tables the
-    # cascade walks are the scaling knob, and as DataFrame stages each
-    # one paid a shuffle + window sort — ~700M rows / ~60 GB of
-    # shuffle at 1M probes × level-5 entry, measured as the lane's
-    # dominant cost and its N→4N efficiency ceiling. The coarse
-    # levels' rollups are BOUNDED BY CONSTRUCTION (≤ 4^9 rows at
-    # level ≤ 9, regardless of corpus size), so the entire coarse
-    # walk now runs inside ONE Arrow-batched mapInPandas kernel over
-    # the probe table: per 10k-probe batch, numpy computes the same
-    # rect bounds and per-probe R* rule level by level (2-level
-    # steps, 16 children/parent) and emits only the surviving
-    # (probe, cell) pairs — a few rows per probe, ZERO shuffles.
-    # Exactness is preserved: the bound formulas are twins of
-    # _with_bounds/_rstar_filter and any valid bounds keep the R*
-    # superset guarantee (final scoring is exact over candidates).
-    # When the FINE stats dim itself fits FINE_COLLECT_ROWS the
-    # kernel walks all the way to `level` and the scoring join
-    # consumes its output directly; on a corpus whose fine dim is too
-    # big to collect (the 100-TB case) the kernel stops at the
-    # 4^9-bounded level-9 rollup and the fine refinement stays a
-    # distributed equi-join on pcell — the unbounded side never
+    # ---- coarse-to-fine R* prefilter, in-kernel: the |probes| ×
+    # |cells| pair tables the walk visits are the scaling knob, and as
+    # DataFrame stages each one paid a shuffle + window sort (~60 GB
+    # of shuffle at 1M probes in r5). The stats rollups at level ≤ 9
+    # are BOUNDED BY CONSTRUCTION (≤ 4^9 rows regardless of corpus
+    # size), so the walk runs inside ONE Arrow-batched mapInPandas
+    # kernel over the probe table: per batch, one bound + R* step per
+    # level emits only the surviving (probe, cell) pairs — a few rows
+    # per probe, ZERO shuffles. When the FINE stats dim fits
+    # FINE_COLLECT_ROWS the walk ends at `level`; on a corpus whose
+    # fine dim is too big to collect (the 100-TB case) it stops at the
+    # level-9 rollup, and the last step runs the same bound kernel
+    # over a distributed pcell equi-join — the unbounded side never
     # leaves the cluster.
-    if level > KNN_MIN_LEVEL:
-        spark = queries.sparkSession
-        if index is not None and index.prep is not None:
-            prep, bc = index.prep
-        else:
-            # one-shot (no index) calls rebuild prep and register a
-            # fresh broadcast per call, reclaimed only when Python GC
-            # drops the result's references (PySpark's normal
-            # broadcast lifecycle) — repeated serving should pass a
-            # knn_index, which pins ONE prep+broadcast across batches
-            prep = _cascade_prep(stats, level)
-            bc = spark.sparkContext.broadcast(prep)
-            if index is not None:
-                # cache prep AND its broadcast: a long-lived serving
-                # session re-uses one executor-side copy across batches
-                index.prep = (prep, bc)
-        sel = q
-        if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
-            # bulk batches arrive in however many files the producer
-            # wrote; the kernel is embarrassingly parallel over probes,
-            # so spread them (narrow rows — a tiny exchange)
-            sel = sel.repartition(spark.sparkContext.defaultParallelism)
-        from pyspark.sql import types as T
+    spark = queries.sparkSession
+    if index.prep is None:
+        # the index pins ONE prep + broadcast across the batches it
+        # serves; a one-shot call's inline index (and its broadcast)
+        # is reclaimed when Python GC drops the result's references
+        prep = _cascade_prep(stats, level)
+        index.prep = (prep, spark.sparkContext.broadcast(prep))
+    prep, bc = index.prep
+    sel = q
+    if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
+        # bulk batches arrive in however many files the producer
+        # wrote; the kernel is embarrassingly parallel over probes,
+        # so spread them (narrow rows — a tiny exchange)
+        sel = sel.repartition(spark.sparkContext.defaultParallelism)
+    from pyspark.sql import types as T
 
-        qf = {f.name: f.dataType for f in q.schema.fields}
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qf["query_id"]),
-                T.StructField("lon", T.DoubleType()),
-                T.StructField("lat", T.DoubleType()),
-                T.StructField("k_req", qf["k_req"]),
-                T.StructField("cell", T.LongType()),
-            ]
-        )
-        coarse_out = sel.mapInPandas(
-            _make_cascade_prune(
-                bc, ["query_id", "lon", "lat", "k_req", "cell"]
+    qf = {f.name: f.dataType for f in q.schema.fields}
+    cand_cols = ["query_id", "lon", "lat", "k_req", "cell"]
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", qf["query_id"]),
+            T.StructField("lon", T.DoubleType()),
+            T.StructField("lat", T.DoubleType()),
+            T.StructField("k_req", qf["k_req"]),
+            T.StructField("cell", T.LongType()),
+        ]
+    )
+    cand = sel.mapInPandas(
+        _make_cascade_prune(bc, cand_cols), schema=out_schema
+    )
+    if prep["cap"] < level:
+        stats_p = stats.select(
+            "cell",
+            "n_in_cell",
+            _parent_cell_col(F.col("cell"), level - prep["cap"]).alias(
+                "pcell"
             ),
-            schema=out_schema,
         )
-        if prep["cap"] == level:
-            # k_req <= 0 probes can contribute no rows (rank <= 0 never
-            # holds) — drop them before the scoring join. Doubles as the
-            # selective predicate Spark's PartitionPruning rule needs on
-            # this side to insert the DPP subquery that prunes a stored
-            # index's scell partitions (mapInPandas output alone carries
-            # no Filter, so the rule would otherwise decline).
-            cand = coarse_out.filter(F.col("k_req") > 0)
-        else:
-            sel2 = coarse_out.withColumnRenamed("cell", "pcell")
-            stats_p = stats.withColumn(
-                "pcell", _parent_cell_col(F.col("cell"), level - prep["cap"])
-            )
-            # the stats side is corpus-sized here (that is WHY the
-            # kernel stopped at the rollup): no broadcast hint — AQE
-            # picks broadcast at runtime iff it actually fits
-            pairs = _with_bounds(sel2.join(stats_p, "pcell"))
-            cand = _rstar_filter(
-                pairs, "cell", ["query_id", "lon", "lat", "k_req", "cell"]
-            )
-    else:
-        # level ≤ KNN_MIN_LEVEL: ≤ 4^3 nonempty cells — one broadcast
-        # cross + R* filter is already minimal
-        pairs = _with_bounds(q.join(F.broadcast(stats)))
-        cand = _rstar_filter(
-            pairs, "cell", ["query_id", "lon", "lat", "k_req", "cell"]
+        # the stats side is corpus-sized here (that is WHY the kernel
+        # stopped at the rollup): no broadcast hint — AQE picks
+        # broadcast at runtime iff it actually fits
+        pairs = (
+            cand.withColumnRenamed("cell", "pcell")
+            .join(stats_p, "pcell")
+            .select(*cand_cols, "n_in_cell")
+            .repartition("query_id")
+            .sortWithinPartitions("query_id")
         )
+        cand = pairs.mapInArrow(
+            _make_fine_refine(level, cand_cols), schema=out_schema
+        )
+    # k_req <= 0 probes can contribute no rows (rank <= 0 never
+    # holds) — drop them before the scoring join. Doubles as the
+    # selective predicate Spark's PartitionPruning rule needs on this
+    # side to insert the DPP subquery that prunes a stored index's
+    # scell partitions (a map-kernel output alone carries no Filter,
+    # so the rule would otherwise decline).
+    cand = cand.filter(F.col("k_req") > 0)
 
     # ---- exact scoring over the pruned candidate cells ----
     # scell (a pure function of cell) rides along as a join key so a
     # partitioned on-disk index (knn_index_save) gets dynamic partition
     # pruning: only the storage regions holding candidate cells are read
     cand = cand.withColumn("scell", _storage_cell_col(F.col("cell"), level))
-    from pyspark.sql import types as T
 
     if probe_rows > KNN_PROBE_BROADCAST_LIMIT:
         # ---- bulk scoring, union-kernel form (r7, guide §8/§4) ----
@@ -1571,17 +1445,16 @@ def knn_join(
         # cand, and a cluster-scale probe batch touches nearly every
         # storage region by nature; the small-batch branch below keeps
         # the DPP-pruned join for selective serving.
-        qf2 = {f.name: f.dataType for f in q.schema.fields}
         sc_fields = {f.name: f.dataType for f in sc.schema.fields}
         members = sc.select(
             "cell",
             "image_id",
             "slon",
             "slat",
-            F.lit(None).cast(qf2["query_id"]).alias("query_id"),
+            F.lit(None).cast(qf["query_id"]).alias("query_id"),
             F.lit(None).cast("double").alias("plon"),
             F.lit(None).cast("double").alias("plat"),
-            F.lit(None).cast(qf2["k_req"]).alias("k_req"),
+            F.lit(None).cast(qf["k_req"]).alias("k_req"),
             F.lit(0).cast("tinyint").alias("side"),
         )
         probes_u = cand.select(
@@ -1602,41 +1475,19 @@ def knn_join(
             _parent_cell_col(F.col("cell"), UNION_SCORE_PARENT_DROP)
         )
         pruned = both.mapInArrow(
-            _make_union_score(gk),
+            _make_union_score(),
             schema=T.StructType(
                 [
-                    T.StructField("query_id", qf2["query_id"]),
-                    T.StructField("k_req", qf2["k_req"]),
+                    T.StructField("query_id", qf["query_id"]),
+                    T.StructField("k_req", qf["k_req"]),
                     T.StructField("image_id", sc_fields["image_id"]),
                     T.StructField("dist_m", T.DoubleType()),
                 ]
             ),
         )
-        if os.environ.get("MOSAIC_KNN_DEBUG"):
-            _KNN_DEBUG.update(cand=cand, joined=both, pruned=pruned)
-        topk = pruned.groupBy("query_id").agg(
-            F.slice(
-                F.sort_array(
-                    F.collect_list(
-                        F.struct(F.col("dist_m"), F.col("image_id"))
-                    )
-                ),
-                1,
-                F.max("k_req"),
-            ).alias("nn")
-        )
-        return topk.select(
-            "query_id", F.posexplode("nn").alias("pos", "nn")
-        ).select(
-            "query_id",
-            (F.col("pos") + 1).cast("int").alias("rank"),
-            F.col("nn.image_id").alias("image_id"),
-            F.col("nn.dist_m").alias("dist_m"),
-        )
+        return _knn_topk(pruned)
 
     joined = sc.join(probe_bcast(cand), ["scell", "cell"])
-    if os.environ.get("MOSAIC_KNN_DEBUG"):
-        _KNN_DEBUG.update(cand=cand, joined=joined)
     # ---- fused score + partial top-k (r5, replacing the salted
     # collect_list two-phase of r4): ONE Arrow stage computes the exact
     # numpy haversine (the identical geometry.haversine_m kernel the
@@ -1720,8 +1571,6 @@ def knn_join(
     # knn_bruteforce (the documented oracle twin) accepts; numpy's
     # lexsort orders object arrays fine, just slower — the id type is
     # the caller's choice
-    from pyspark.sql import types as T
-
     in_fields = {f.name: f.dataType for f in scored_in.schema.fields}
     pruned = scored_in.mapInArrow(
         _score_partial,
@@ -1734,23 +1583,14 @@ def knn_join(
             ]
         ),
     )
-    topk = pruned.groupBy("query_id").agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("dist_m"), F.col("image_id")))
-            ),
-            1,
-            F.max("k_req"),
-        ).alias("nn")
-    )
-    return topk.select(
-        "query_id", F.posexplode("nn").alias("pos", "nn")
-    ).select(
-        "query_id",
-        (F.col("pos") + 1).cast("int").alias("rank"),
-        F.col("nn.image_id").alias("image_id"),
-        F.col("nn.dist_m").alias("dist_m"),
-    )
+    return _knn_topk(pruned)
+
+
+def _knn_topk(pruned: DataFrame) -> DataFrame:
+    """knn_join's exact (dist_m, image_id) top-k_req tail."""
+    return _topk_tail(
+        pruned, ["query_id"], ["dist_m", "image_id"], F.max("k_req")
+    ).select("query_id", "rank", "image_id", "dist_m")
 
 
 # cap on the per-chunk |points| × |probes| distance-matrix cells the
@@ -1794,6 +1634,7 @@ def knn_bruteforce_points(
     import numpy as np
 
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     from . import geometry as geo
 
@@ -1820,7 +1661,10 @@ def knn_bruteforce_points(
     qx_np = np.array([float(r[1]) for r in prows], dtype=np.float64)
     qy_np = np.array([float(r[2]) for r in prows], dtype=np.float64)
     bc = spark.sparkContext.broadcast((pid_np, qx_np, qy_np))
-    qid_type = q_fields[probe_id]
+    # the collected ids come back as numpy int64/object arrays; emit
+    # them as the probe table's declared Arrow type (an int32 id
+    # column otherwise reaches Spark as int64 and fails the read)
+    qid_type = to_arrow_type(q_fields[probe_id])
 
     def kern(batches):
         import pyarrow as pa
@@ -1877,7 +1721,7 @@ def knn_bruteforce_points(
             pidx = t.column("__p").to_numpy(zero_copy_only=False)
             out = pa.table(
                 {
-                    probe_id: pa.array(ids[pidx]),
+                    probe_id: pa.array(ids[pidx], type=qid_type),
                     point_id: t.column(point_id),
                     "dist_m": t.column("dist_m"),
                 }
@@ -1887,22 +1731,8 @@ def knn_bruteforce_points(
     pruned = points.select(point_id, px, py).mapInArrow(
         kern, schema=out_schema
     )
-    topk = pruned.groupBy(probe_id).agg(
-        F.slice(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("dist_m"), F.col(point_id)))
-            ),
-            1,
-            k,
-        ).alias("nn")
-    )
-    return topk.select(
-        probe_id, F.posexplode("nn").alias("pos", "nn")
-    ).select(
-        probe_id,
-        (F.col("pos") + 1).cast("int").alias("rank"),
-        F.col(f"nn.{point_id}").alias(point_id),
-        F.col("nn.dist_m").alias("dist_m"),
+    return _topk_tail(pruned, [probe_id], ["dist_m", point_id], k).select(
+        probe_id, "rank", point_id, "dist_m"
     )
 
 
@@ -2214,14 +2044,4 @@ def topk_by_key(
             yield compact(acc)
 
     pruned = src.mapInPandas(partial, schema=schema)
-    sel = F.struct(*[F.col(c) for c in order_cols]).alias("sel")
-    topk = pruned.groupBy(*key_cols).agg(
-        F.slice(F.sort_array(F.collect_list(sel)), 1, k).alias("nn")
-    )
-    out = topk.select(
-        *key_cols, F.posexplode("nn").alias("pos", "nn")
-    )
-    cols = [F.col(c) for c in key_cols]
-    cols.append((F.col("pos") + 1).alias("rank"))
-    cols.extend(F.col(f"nn.{c}").alias(c) for c in order_cols)
-    return out.select(*cols)
+    return _topk_tail(pruned, key_cols, order_cols, k)

@@ -278,13 +278,14 @@ def test_knn_pick_level_heuristic_shape():
 
 
 def test_knn_rect_bounds_bracket_sampled_distances():
-    """_bounds_np's (mind, maxd) must bracket the true min/max distance
-    from the probe to ANY point of the cell rect — the R* pruning rule
-    is exact only under that invariant. maxd is the r6 exact rect
-    maximum (Δλ_max + max-stationary latitude), replacing the slack
-    perimeter-sum diameter; adversarial probe modes: uniform, near the
-    cell's antipodal meridian (Δλ_max = 180 interior case), inside the
-    cell, and near-polar."""
+    """_bounds_fast_np's (a_lo, a_hi) — the haversine-argument bounds
+    every cascade and refinement step prunes with — must bracket
+    a = sin²(d/2R) of the true min/max distance from the probe to ANY
+    point of the cell rect: the R* pruning rule is exact only under
+    that invariant. a_hi is the exact rect maximum (Δλ_max +
+    max-stationary latitude); adversarial probe modes: uniform, near
+    the cell's antipodal meridian (Δλ_max = 180 interior case), inside
+    the cell, and near-polar."""
     from mosaic_engine.geometry import haversine_m
 
     rng = np.random.default_rng(1234)
@@ -313,8 +314,10 @@ def test_knn_rect_bounds_bracket_sampled_distances():
         else:
             lon = float(rng.uniform(-180, 180))
             lat = float(rng.choice([-89.95, 89.95]))
-        mind, maxd = ops._bounds_np(
-            np.array([lon]), np.array([lat]), cw, cs, ce, cn
+        p1 = np.radians(np.array([lat]))
+        a_lo, a_hi = ops._bounds_fast_np(
+            np.array([lon]), np.sin(p1), np.cos(p1), np.tan(p1),
+            ops._cell_attrs_np(cell, level),
         )
         gs = np.linspace(0, 1, 21)
         GL, GP = np.meshgrid(
@@ -324,8 +327,66 @@ def test_knn_rect_bounds_bracket_sampled_distances():
             np.full(GL.size, lon), np.full(GL.size, lat),
             GL.ravel(), GP.ravel(),
         )
-        assert mind[0] <= d.min() + 1e-6, (level, x, y, lon, lat)
-        assert maxd[0] >= d.max() - 1e-6, (level, x, y, lon, lat)
+        a = np.sin(d / (2.0 * ops.EARTH_R_M)) ** 2
+        assert a_lo[0] <= a.min() + 1e-15, (level, x, y, lon, lat)
+        assert a_hi[0] >= a.max() - 1e-15, (level, x, y, lon, lat)
+
+
+@pytest.mark.parametrize("saved", [False, True])
+def test_knn_fine_refinement_past_collect_cap_matches_brute(
+    spark, scenes_df, scene_records, tmp_path, monkeypatch, saved
+):
+    """A stats dim larger than FINE_COLLECT_ROWS stops the in-kernel
+    cascade at the level-9 rollup (prep cap 9 < level) and refines
+    the rest over a distributed pcell join. That path must stay exact
+    for global and in-extent probes with per-query k, on an inline
+    index and on a saved-then-loaded one (prep_cap persisted)."""
+    from pyspark.sql import Row
+
+    monkeypatch.setattr(ops, "FINE_COLLECT_ROWS", 10)
+    rng = np.random.default_rng(2024)
+    cents = [
+        (_oracle_centroid_lon(r["min_lon"], r["max_lon"]),
+         (r["min_lat"] + r["max_lat"]) / 2)
+        for r in scene_records
+    ]
+    probes = []
+    for i in range(60):  # global
+        probes.append((float(rng.uniform(-180, 180)),
+                       float(rng.uniform(-88, 88))))
+    for i in rng.integers(0, len(cents), 60):  # in extent, near scenes
+        lon, lat = cents[i]
+        probes.append((float(lon + rng.uniform(-0.5, 0.5)),
+                       float(np.clip(lat + rng.uniform(-0.5, 0.5), -89, 89))))
+    ks = rng.integers(1, 8, len(probes))
+    queries = spark.createDataFrame(
+        [Row(query_id=i, lon=lo, lat=la, k=int(ks[i]))
+         for i, (lo, la) in enumerate(probes)]
+    )
+    exp = sorted(map(tuple, ops.knn_bruteforce(scenes_df, queries).collect()))
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev_batch = spark.conf.get(batch_conf)
+    for level in (11, 12):
+        idx = ops.knn_index(scenes_df, level=level)
+        if saved:
+            path = str(tmp_path / f"idx_{level}")
+            ops.knn_index_save(idx, path)
+            meta = spark.read.parquet(os.path.join(path, "meta")).first()
+            assert meta["prep_cap"] == 9
+            idx = ops.knn_index_load(spark, path)
+        # tiny Arrow batches split probes' pair runs across batches, so
+        # the refinement's carry of the trailing probe is exercised
+        spark.conf.set(batch_conf, "7")
+        try:
+            got = sorted(
+                map(tuple, ops.knn_join(None, queries, index=idx).collect())
+            )
+        finally:
+            spark.conf.set(batch_conf, prev_batch)
+        assert idx.prep[0]["cap"] == 9 < level
+        assert [g[:3] for g in got] == [e[:3] for e in exp], f"level={level}"
+        for g, e in zip(got, exp):
+            assert g[3] == pytest.approx(e[3], rel=1e-12)
 
 
 def test_knn_index_reuse_matches_brute(spark, scenes_df):
@@ -672,3 +733,48 @@ def test_knn_random_corpora_match_brute(spark, tmp_path, corpus_seed, hotspot):
     assert [g[:3] for g in got] == [e[:3] for e in exp]
     for g, e in zip(got, exp):
         assert g[3] == pytest.approx(e[3], rel=1e-12)
+
+
+@pytest.mark.parametrize(
+    "id_type", ["int", "long", "string", "decimal(10,0)", "date"]
+)
+def test_knn_bruteforce_points_probe_id_types(spark, id_type):
+    """knn_bruteforce_points serves every probe-id type its schema
+    accepts: the emitted id column carries the probe table's declared
+    type (an int32 id once failed inside the Arrow writer)."""
+    from pyspark.sql import functions as F
+
+    from mosaic_engine.geometry import haversine_m
+
+    rng = np.random.default_rng(5)
+    px, py = rng.uniform(-20, 20, 40), rng.uniform(-20, 20, 40)
+    qx, qy = rng.uniform(-20, 20, 6), rng.uniform(-20, 20, 6)
+    points = spark.createDataFrame(
+        [(i, float(px[i]), float(py[i])) for i in range(40)],
+        "pt long, px double, py double",
+    )
+    raw = spark.createDataFrame(
+        [(i, float(qx[i]), float(qy[i])) for i in range(6)],
+        "q long, qx double, qy double",
+    )
+    if id_type == "date":
+        qid = F.date_add(F.lit("2020-01-01").cast("date"), F.col("q").cast("int"))
+    else:
+        qid = F.col("q").cast(id_type)
+    probes = raw.select(qid.alias("qid"), "q", "qx", "qy")
+    got = ops.knn_bruteforce_points(
+        points, probes.drop("q"), 3, point_id="pt", px="px", py="py",
+        probe_id="qid", qx="qx", qy="qy",
+    )
+    assert got.schema["qid"].dataType == probes.schema["qid"].dataType
+    back = {r["qid"]: r["q"] for r in probes.collect()}
+    rows = sorted((back[r["qid"]], r["rank"], r["pt"], r["dist_m"])
+                  for r in got.collect())
+    exp = []
+    for q in range(6):
+        d = haversine_m(np.full(40, qx[q]), np.full(40, qy[q]), px, py)
+        for rank, i in enumerate(np.lexsort((np.arange(40), d))[:3], 1):
+            exp.append((q, rank, int(i), float(d[i])))
+    assert [r[:3] for r in rows] == [e[:3] for e in exp]
+    for r, e in zip(rows, exp):
+        assert r[3] == pytest.approx(e[3], rel=1e-12)
