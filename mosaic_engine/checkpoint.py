@@ -1,14 +1,17 @@
 """Checkpoint / resume / lineage for the mosaic build (north rule).
 
 Partition unit = quadkey prefix (first PREFIX_LEN quadkey digits — a
-spatial range, ≤ 4^PREFIX_LEN groups). The assignments table is written
-``partitionBy('qk_prefix')`` with one manifest JSON per prefix recording
-lineage: input-file snapshot hash, config hash, row count, wall time.
-A resumed run reuses completed prefixes' parquet output as-is
-(idempotent dynamic partition overwrite), prunes scenes wholly
-contained in completed prefixes BEFORE the explode, and filters
-completed prefixes' rows before the write — only boundary-spanning
-scenes pay recompute.
+spatial range, ≤ 4^PREFIX_LEN groups). The build collects its
+assignments once, as an Arrow table sorted by quadkey, and commits from
+it on the driver: each prefix is one parquet file written into a hidden
+``assignments/.qk_prefix=XX.tmp/`` dir and renamed to ``qk_prefix=XX/``;
+after all the data, one manifest JSON per prefix records lineage:
+input-file snapshot hash, config hash, row count, wall time. A resumed
+run reads completed prefixes' parquet back as-is, evicts everything
+else (stale or unmanifested prefixes, crash-left ``.tmp`` dirs), prunes
+scenes wholly contained in completed prefixes BEFORE the explode, and
+filters completed prefixes' rows before the collect — only
+boundary-spanning scenes pay recompute.
 
 [BASELINE.json:14]: "resumable from checkpoint with per-partition
 lineage + metrics".
@@ -19,8 +22,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -166,11 +173,9 @@ def build_with_checkpoint(
 ) -> tuple[dict, dict]:
     """E1 with per-prefix checkpointing. Returns (mosaic doc, metrics)."""
     if "://" in out_dir:
-        # the per-prefix manifest/eviction bookkeeping below is
-        # POSIX-bound (os.listdir / shutil.rmtree / open); a remote
-        # out_dir would silently split data (written remotely by Spark)
-        # from manifests (written to a literal local path) AND disable
-        # the stale-partition eviction — fail loud instead (r5 review).
+        # the commit below (partition writes, renames, manifests,
+        # eviction) uses local file APIs; a remote URI would be taken
+        # as a literal local path — fail loud instead (r5 review).
         # Remote deployments: mount the store, or lift this module onto
         # a StorageClient seam like streaming.py's.
         raise ValueError(
@@ -182,6 +187,7 @@ def build_with_checkpoint(
     cfg_hash = cfg.config_hash()
     in_hash = input_snapshot_hash(scenes)
     data_dir = os.path.join(out_dir, "assignments")
+    os.makedirs(data_dir, exist_ok=True)
 
     done: set[str] = set()
     if resume:
@@ -194,20 +200,22 @@ def build_with_checkpoint(
             ):
                 done.add(pfx)
 
-    # evict STALE state before writing: dynamic partition overwrite only
-    # replaces partitions present in the NEW data, so a partition left
-    # by a previous run under a different config/input — one the current
-    # build produces no rows for — would silently survive into the
-    # rebuilt mosaic and then be re-manifested under the new lineage.
-    # Anything on disk that is not a verified `done` prefix is dead.
-    import shutil
-
-    if os.path.isdir(data_dir):
-        for d in os.listdir(data_dir):
-            if d.startswith("qk_prefix=") and d.split("=", 1)[1] not in done:
-                shutil.rmtree(os.path.join(data_dir, d))
+    # evict STALE state before writing: a prefix left by a previous
+    # run under a different config/input — one the current build
+    # produces no rows for — would otherwise survive into the rebuilt
+    # mosaic; so would a prefix whose data committed but whose
+    # manifest did not (a crash between the two), and a `.tmp` dir is
+    # a crash mid-write. Anything on disk that is not a verified
+    # `done` prefix is dead.
+    for d in os.listdir(data_dir):
+        if d.startswith(".qk_prefix=") or (
+            d.startswith("qk_prefix=") and d.split("=", 1)[1] not in done
+        ):
+            shutil.rmtree(os.path.join(data_dir, d))
     for fn in os.listdir(_manifest_dir(out_dir)):
-        if fn.endswith(".json") and fn[: -len(".json")] not in done:
+        if fn.endswith(".tmp") or (
+            fn.endswith(".json") and fn[: -len(".json")] not in done
+        ):
             os.remove(os.path.join(_manifest_dir(out_dir), fn))
 
     # resume compute-pruning (r4 review): the post-aggregation
@@ -250,95 +258,69 @@ def build_with_checkpoint(
         n_scenes_pruned = scenes.filter(~keep).count()
         scenes_build = scenes.filter(keep)
 
-    assign = mz.quadkey_assignments(scenes_build, cfg).withColumn(
-        "qk_prefix", F.substring("quadkey", 1, PREFIX_LEN)
-    )
-    todo = assign
+    assign = mz.quadkey_assignments(scenes_build, cfg)
     if done:
-        todo = assign.filter(~F.col("qk_prefix").isin(sorted(done)))
+        assign = assign.filter(
+            ~F.substring("quadkey", 1, PREFIX_LEN).isin(sorted(done))
+        )
 
     t0 = time.time()
-    # session confs are global: save/restore so this builder can't
-    # silently turn every LATER overwrite in the session dynamic (which
-    # stops truncating tables) or string-type later partition reads
-    prev_conf = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.sources.partitionOverwriteMode",
-            "spark.sql.sources.partitionColumnTypeInference.enabled",
-        )
-    }
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # keep qk_prefix a STRING on re-read ("01" must not become int 1)
-    spark.conf.set(
-        "spark.sql.sources.partitionColumnTypeInference.enabled", "false"
-    )
-    try:
-        # range-cluster output files by quadkey so each prefix dir holds
-        # sorted, spatially-local runs (checkpointable ranges, §4.3.4)
-        (
-            todo.repartitionByRange(cfg.salt_buckets, "quadkey")
-            .sortWithinPartitions("quadkey")
-            .write.mode("overwrite")
-            .partitionBy("qk_prefix")
-            .parquet(data_dir)
-        )
-        wall = time.time() - t0
+    todo = mz.collect_assignments(assign)
+    todo_pfx = pc.utf8_slice_codeunits(todo["quadkey"], 0, PREFIX_LEN)
+    written = {}
+    for pfx in sorted(pc.unique(todo_pfx).to_pylist()):
+        # one sorted file per prefix, written into a hidden temp dir and
+        # renamed into place: a reader (or a resume) sees the whole
+        # partition or none of it
+        part = written[pfx] = todo.filter(pc.equal(todo_pfx, pfx))
+        tmp = os.path.join(data_dir, f".qk_prefix={pfx}.tmp")
+        os.makedirs(tmp)
+        pq.write_table(part, os.path.join(tmp, "part-00000.parquet"))
+        os.replace(tmp, os.path.join(data_dir, f"qk_prefix={pfx}"))
+    wall = time.time() - t0
 
-        # per-prefix manifests for everything now present
-        result = spark.read.parquet(data_dir)
-        counts = {
-            r["qk_prefix"]: (r["n"], r["n_rows"])
-            for r in result.groupBy("qk_prefix")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("n_assets").alias("n_rows"),
-            )
-            .collect()
-        }
-        for pfx, (n_tiles, n_rows) in counts.items():
-            if pfx in done:
-                continue
-            manifest = {
-                "qk_prefix": pfx,
-                "config_hash": cfg_hash,
-                "input_hash": in_hash,
-                "n_tiles": int(n_tiles),
-                "n_assignments": int(n_rows),
-                "job_write_wall_sec": wall,  # whole-job write wall (shared
-                # by every prefix manifest of the run — NOT per-prefix cost)
-                "written_at": time.time(),
-            }
-            tmp = os.path.join(_manifest_dir(out_dir), f".{pfx}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(manifest, f)
-            os.replace(tmp, os.path.join(_manifest_dir(out_dir), f"{pfx}.json"))
-
-        # assemble the document from the checkpointed table (not a recompute)
-        filtered = ops.filter_scenes(scenes, cfg)
-        bounds = ops.mosaic_bounds(filtered, result)
-        rows = result.select("quadkey", "assets").collect()
-        tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-        doc = mz.assemble_mosaic_doc(tiles_map, bounds, cfg)
-
-        with open(os.path.join(out_dir, "mosaic.json"), "w") as f:
-            f.write(mz.canonical_json(doc))
-        metrics = {
-            "n_scenes_pruned_on_resume": int(n_scenes_pruned),
-            "n_tiles": len(tiles_map),
-            "n_assignments": int(sum(len(v) for v in tiles_map.values())),
-            "n_prefixes": len(counts),
-            "n_prefixes_skipped": len(done),
+    # manifests after ALL the data: a manifest vouches for a committed
+    # partition, never for one still being written
+    for pfx, part in written.items():
+        manifest = {
+            "qk_prefix": pfx,
             "config_hash": cfg_hash,
             "input_hash": in_hash,
-            "write_wall_sec": wall,
+            "n_tiles": part.num_rows,
+            "n_assignments": pc.sum(part["n_assets"]).as_py(),
+            "job_write_wall_sec": wall,  # whole-job write wall (shared
+            # by every prefix manifest of the run — NOT per-prefix cost)
+            "written_at": time.time(),
         }
-        with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=2)
-        return doc, metrics
-    finally:
-        for k, v in prev_conf.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        tmp = os.path.join(_manifest_dir(out_dir), f".{pfx}.json.tmp")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, os.path.join(_manifest_dir(out_dir), f"{pfx}.json"))
+
+    # the document covers resumed prefixes (read back as committed) plus
+    # this run's rows — no recompute, no Spark re-read
+    table = pa.concat_tables(
+        [
+            pq.read_table(
+                os.path.join(data_dir, f"qk_prefix={p}"), schema=todo.schema
+            )
+            for p in sorted(done)
+        ]
+        + [todo]
+    )
+    doc = mz.doc_from_table(scenes, table, cfg)
+    with open(os.path.join(out_dir, "mosaic.json"), "w") as f:
+        f.write(mz.canonical_json(doc))
+    metrics = {
+        "n_scenes_pruned_on_resume": int(n_scenes_pruned),
+        "n_tiles": table.num_rows,
+        "n_assignments": pc.sum(table["n_assets"]).as_py() or 0,
+        "n_prefixes": len(done) + len(written),
+        "n_prefixes_skipped": len(done),
+        "config_hash": cfg_hash,
+        "input_hash": in_hash,
+        "write_wall_sec": wall,
+    }
+    with open(os.path.join(out_dir, "metrics.json"), "w") as f:
+        json.dump(metrics, f, indent=2)
+    return doc, metrics

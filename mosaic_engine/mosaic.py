@@ -4,16 +4,18 @@ Spark-first equivalent of [ref: landsat_cogeo_mosaic/mosaic.py#
 features_to_mosaicJSON] + the `create` CLI entry
 ([ref: cli.py#create]): declarative filters (Catalyst pushdown) → fused
 footprint→quadkey explode (one Arrow stage, no shuffle) → salted
-two-phase selection aggregation → bounded driver-side collect
-(≤ 4^quadkey_zoom rows) → canonical JSON (SURVEY.md §7.3 byte-equality
-rules — the serializer is shared character-for-character with
-tests/oracle.py, which generates the committed goldens).
+two-phase selection aggregation → one bounded driver-side Arrow
+collect (≤ 4^quadkey_zoom rows) → canonical JSON (SURVEY.md §7.3
+byte-equality rules — the serializer is shared character-for-character
+with tests/oracle.py, which generates the committed goldens).
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from . import ops, udfs
@@ -57,29 +59,32 @@ def assemble_mosaic_doc(
     }
 
 
+def collect_assignments(assign: DataFrame) -> pa.Table:
+    """THE one driver collect of a build: the (cell, quadkey, assets,
+    n_assets) table as Arrow, sorted by quadkey — bounded by
+    4^quadkey_zoom rows regardless of input scale, and smaller than
+    the equivalent dict of Python lists."""
+    return assign.toArrow().sort_by("quadkey")
+
+
+def doc_from_table(scenes: DataFrame, table: pa.Table, cfg: MosaicConfig) -> dict:
+    """The mosaicJSON document of a collected assignments table; its
+    bounds cover the filtered scenes the table's asset lists use."""
+    used = pa.table({"image_id": pc.unique(pc.list_flatten(table["assets"]))})
+    bounds = ops._used_bounds(
+        ops.filter_scenes(scenes, cfg), scenes.sparkSession.createDataFrame(used)
+    )
+    tiles_map = dict(zip(table["quadkey"].to_pylist(), table["assets"].to_pylist()))
+    return assemble_mosaic_doc(tiles_map, bounds, cfg)
+
+
 def build_mosaic(scenes: DataFrame, cfg: MosaicConfig) -> tuple[dict, DataFrame]:
     """Full E1: returns (mosaicJSON document dict, assignments DataFrame).
 
-    Only the final (quadkey, assets) table crosses to the driver —
-    bounded by 4^quadkey_zoom regardless of input scale; for
-    quadkey_zoom > 10 assemble via toLocalIterator instead of collect.
-    """
-    # two actions consume `assign` (the bounds semi-join and the tile
-    # collect) — persist across them so the expensive explode+selection
-    # pipeline runs once, not twice (r4 review); released afterwards so
-    # the session doesn't accumulate cached builds
-    assign = quadkey_assignments(scenes, cfg).persist()
-    try:
-        filtered = ops.filter_scenes(scenes, cfg)
-        bounds = ops.mosaic_bounds(filtered, assign)
-        if cfg.quadkey_zoom > 10:
-            rows = assign.select("quadkey", "assets").toLocalIterator()
-        else:
-            rows = assign.select("quadkey", "assets").collect()
-        tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-    finally:
-        assign.unpersist(blocking=False)
-    return assemble_mosaic_doc(tiles_map, bounds, cfg), assign
+    The assignments run once, into collect_assignments; the returned
+    DataFrame is the lazy plan, for callers that query it further."""
+    assign = quadkey_assignments(scenes, cfg)
+    return doc_from_table(scenes, collect_assignments(assign), cfg), assign
 
 
 def missing_quadkeys_geojson(

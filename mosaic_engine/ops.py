@@ -229,7 +229,16 @@ def assignments_relational(assign: DataFrame) -> DataFrame:
 
 
 def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:
-    """A4 over scenes actually used in the mosaic (left_semi join).
+    """A4 over the scenes ``assign``'s asset lists actually use."""
+    return _used_bounds(
+        scenes, assign.select(F.explode("assets").alias("image_id")).distinct()
+    )
+
+
+def _used_bounds(scenes: DataFrame, used_ids: DataFrame) -> list[float]:
+    """A4 over the scenes whose image_id is in ``used_ids`` — a
+    left_semi join against a broadcast of the (≤ |scenes|) distinct
+    ids, so the scene side never shuffles.
 
     Antimeridian (r4 review): a crossing scene stores a WRAPPED bbox
     (min_lon > max_lon) — raw min/max would treat those as ordinary
@@ -239,11 +248,7 @@ def mosaic_bounds(scenes: DataFrame, assign: DataFrame) -> list[float]:
     bounds stay spec-valid and always cover every emitted tile (the
     lat axis is unaffected). Mirrored scalar logic in
     tests/oracle.py.features_to_mosaic keeps goldens byte-equal."""
-    used = scenes.join(
-        assign.select(F.explode("assets").alias("image_id")).distinct(),
-        "image_id",
-        "left_semi",
-    )
+    used = scenes.join(F.broadcast(used_ids), "image_id", "left_semi")
     crossing = F.col("min_lon") > F.col("max_lon")
     row = used.agg(
         F.min(F.when(crossing, -180.0).otherwise(F.col("min_lon"))),

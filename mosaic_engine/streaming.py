@@ -1369,10 +1369,7 @@ def finalize(
             f"work_dir {work_dir} holds no tiles-log data — run "
             "run_incremental first"
         )
-    tiles = spark.read.parquet(*paths)
-    assign = ops.assignments(tiles, cfg)
-    scenes = ops.filter_scenes(spark.read.parquet(scenes_dir), cfg)
-    bounds = ops.mosaic_bounds(scenes, assign)
-    rows = assign.select("quadkey", "assets").collect()
-    tiles_map = {r["quadkey"]: list(r["assets"]) for r in rows}
-    return mz.assemble_mosaic_doc(tiles_map, bounds, cfg)
+    assign = ops.assignments(spark.read.parquet(*paths), cfg)
+    return mz.doc_from_table(
+        spark.read.parquet(scenes_dir), mz.collect_assignments(assign), cfg
+    )

@@ -6,6 +6,8 @@ import json
 import os
 import shutil
 
+import pytest
+
 from mosaic_engine import checkpoint, mosaic as mz
 from mosaic_engine.ops import MosaicConfig
 
@@ -260,3 +262,121 @@ def test_lineage_and_guard_edges(spark, scenes_df, tmp_path):
             spark, scenes_df, MosaicConfig(quadkey_zoom=7),
             "s3a://bucket/ckpt",
         )
+
+
+def test_crash_between_rename_and_manifest_resumes(
+    spark, scenes_df, tmp_path, monkeypatch
+):
+    """A resume killed after its first prefix's rename and before any
+    manifest leaves an unmanifested partition and a torn `.tmp` dir;
+    the next resume rebuilds exactly the unmanifested prefixes, leaves
+    no `.tmp` dir, and returns the clean build's document."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "ckpt_crash")
+    data = os.path.join(out, "assignments")
+    doc1, m1 = _build(spark, scenes_df, out)
+    mans1 = checkpoint.read_manifests(out)
+    victims = sorted(mans1)[:2]
+    assert len(victims) == 2
+    for v in victims:
+        os.remove(os.path.join(out, "_manifest", f"{v}.json"))
+        shutil.rmtree(os.path.join(data, f"qk_prefix={v}"))
+
+    real_write = pq.write_table
+    writes = []
+
+    def crash_on_second_write(table, where, **kw):
+        writes.append(where)
+        if len(writes) == 2:
+            with open(where, "wb") as f:
+                f.write(b"PAR1 torn")
+            raise OSError("injected crash mid-write")
+        return real_write(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", crash_on_second_write)
+    with pytest.raises(OSError, match="injected crash"):
+        _build(spark, scenes_df, out, resume=True)
+    monkeypatch.setattr(pq, "write_table", real_write)
+    # the crash state: victim 0 committed without a manifest, victim 1
+    # torn in its temp dir
+    assert os.path.isdir(os.path.join(data, f"qk_prefix={victims[0]}"))
+    assert os.path.isdir(os.path.join(data, f".qk_prefix={victims[1]}.tmp"))
+    assert set(checkpoint.read_manifests(out)) == set(mans1) - set(victims)
+
+    doc2, m2 = _build(spark, scenes_df, out, resume=True)
+    assert m2["n_prefixes_skipped"] == m1["n_prefixes"] - len(victims)
+    mans2 = checkpoint.read_manifests(out)
+    assert set(mans2) == set(mans1)
+    for p in mans1:  # only the unmanifested prefixes were rewritten
+        assert (mans2[p] == mans1[p]) == (p not in victims)
+    assert not [d for d in os.listdir(data) if d.startswith(".")]
+    assert mz.canonical_json(doc2) == mz.canonical_json(doc1)
+
+
+def test_assignments_layout_contract(spark, scenes_df, tmp_path):
+    """The on-disk assignments table, as Spark reads it: a string
+    qk_prefix partition over (cell, quadkey, assets, n_assets), with
+    row and asset counts matching the manifests and metrics."""
+    out = str(tmp_path / "ckpt_layout")
+    _, m = _build(spark, scenes_df, out)
+    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        df = spark.read.parquet(os.path.join(out, "assignments"))
+        fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+        rows = df.select("qk_prefix", "quadkey", "n_assets").collect()
+    finally:
+        spark.conf.set(key, prev)
+    assert fields == {
+        "cell": "bigint",
+        "quadkey": "string",
+        "assets": "array<string>",
+        "n_assets": "int",
+        "qk_prefix": "string",
+    }
+    mans = checkpoint.read_manifests(out)
+    assert {r["qk_prefix"] for r in rows} == set(mans)
+    assert all(r["quadkey"].startswith(r["qk_prefix"]) for r in rows)
+    assert len(rows) == sum(x["n_tiles"] for x in mans.values()) == m["n_tiles"]
+    assert sum(r["n_assets"] for r in rows) == m["n_assignments"]
+
+
+def test_assignments_sorted_within_prefix(spark, scenes_df, tmp_path):
+    """Each prefix's rows, read file by file in name order, run sorted
+    by quadkey — the spatially-local ranges a reader can seek on."""
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "ckpt_sorted")
+    _build(spark, scenes_df, out)
+    data = os.path.join(out, "assignments")
+    for d in sorted(os.listdir(data)):
+        files = sorted(
+            f for f in os.listdir(os.path.join(data, d)) if f.endswith(".parquet")
+        )
+        qks = [
+            qk
+            for f in files
+            for qk in pq.read_table(os.path.join(data, d, f))["quadkey"].to_pylist()
+        ]
+        assert qks == sorted(qks), d
+
+
+@pytest.mark.parametrize("optimized", [True, False])
+def test_build_job_count(spark, scenes_df, tmp_path, optimized):
+    """One committed build submits at most 8 Spark jobs: the
+    assignments run once, into one Arrow collect, and the bounds
+    semi-join a broadcast of the used ids."""
+    sc = spark.sparkContext
+    group = f"ckpt-job-count-{optimized}"
+    cfg = MosaicConfig(quadkey_zoom=7, optimized_selection=optimized)
+    sc.setJobGroup(group, "build_with_checkpoint job count")
+    try:
+        checkpoint.build_with_checkpoint(
+            spark, scenes_df, cfg, str(tmp_path / "ckpt_jobs")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 8

@@ -249,14 +249,13 @@ def test_validate_mosaic(spark, scenes_df):
     assert any("bounds" in e for e in mz.validate_mosaic(bad2))
 
 
-def test_mosaic_z12_streams_tiles_without_full_collect(
+def test_mosaic_z12_assembles_from_one_arrow_collect(
     spark, scene_records, tmp_path, monkeypatch
 ):
-    """(VERDICT r4 #8) quadkey_zoom > 10 must assemble the document
-    through the streamed toLocalIterator path: collect() on the
-    (quadkey, assets) table is forbidden (at 4^12 potential keys a full
-    collect materializes every Row at once), and the result must stay
-    byte-equal to the scalar oracle."""
+    """(VERDICT r4 #8) At quadkey_zoom 12 (4^12 potential keys) the
+    document is assembled from ONE Arrow collect of the tiles table —
+    no Row-materializing collect() or toLocalIterator() of it — and
+    stays byte-equal to the scalar oracle."""
     import pyarrow.parquet as pq
 
     sub = scene_records[:12]
@@ -274,28 +273,25 @@ def test_mosaic_z12_streams_tiles_without_full_collect(
     # patch the CONCRETE DataFrame class (pyspark 4's classic impl
     # overrides the pyspark.sql.DataFrame base methods)
     DataFrame = type(df)
-    calls = {"iter": 0}
-    real_collect = DataFrame.collect
-    real_tli = DataFrame.toLocalIterator
+    calls = {"collect": 0, "toLocalIterator": 0, "toArrow": 0}
 
-    def guarded_collect(self):
-        if set(self.columns) == {"quadkey", "assets"}:
-            raise AssertionError(
-                "full collect() of the tiles table at quadkey_zoom > 10"
-            )
-        return real_collect(self)
+    def spy(name):
+        real = getattr(DataFrame, name)
 
-    def spying_tli(self, *a, **kw):
-        calls["iter"] += 1
-        return real_tli(self, *a, **kw)
+        def counted(self, *a, **kw):
+            if {"quadkey", "assets"} <= set(self.columns):
+                calls[name] += 1
+            return real(self, *a, **kw)
 
-    monkeypatch.setattr(DataFrame, "collect", guarded_collect)
-    monkeypatch.setattr(DataFrame, "toLocalIterator", spying_tli)
+        monkeypatch.setattr(DataFrame, name, counted)
+
+    for name in calls:
+        spy(name)
     cfg = MosaicConfig(quadkey_zoom=12, preference="newest")
     doc, _ = mz.build_mosaic(df, cfg)
     monkeypatch.undo()
 
-    assert calls["iter"] >= 1  # streamed assembly actually ran
+    assert calls == {"collect": 0, "toLocalIterator": 0, "toArrow": 1}
     assert len(doc["tiles"]) > 1000  # z12 really fans out
     odoc = _oracle_doc(sub, cfg)
     assert mz.canonical_json(doc) == oracle.canonical_json(odoc)
