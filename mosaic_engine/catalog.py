@@ -225,7 +225,8 @@ def read_snapshot_manifest(
     defined no-manifest behavior, and a torn file should degrade to
     that, not crash the resume path. A NON-corruption IO error that
     persists across the retry while the object provably EXISTS raises
-    instead (r7, ADVICE r6): that is an outage, and degrading it to
+    instead (r7, ADVICE r6) — and so does one whose existence probe
+    fails as well: that is an outage, and degrading it to
     'absent' would let write_table(mode='ignore') re-commit a fresh
     snapshot over a healthy manifest; corruption signatures
     (checksum/EOF) keep the torn-write 'absent' contract."""
@@ -287,7 +288,9 @@ def read_snapshot_manifest(
             try:
                 exists = fs.exists(jpath)
             except Exception:
-                exists = False
+                # the probe failed too: absence can no longer be told
+                # apart from the outage, so do not claim 'absent'
+                raise err from None
             if exists:
                 raise
             return None

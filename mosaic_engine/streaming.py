@@ -32,7 +32,9 @@ invisible to readers and garbage-collected by the next compaction.
 `chk_id` records the streaming checkpoint's query id at compaction
 time: a work_dir whose _chk was deleted/reset while the manifest still
 holds folded batch ids would replay NEW input under recycled batch ids
-and silently skip it, so run_incremental refuses that state instead.
+and silently skip it, so both run_incremental and run_incremental_dedup
+refuse that state (_require_chk_binding) — a checkpoint is never
+adopted after the fact.
 
 Storage seam (r5 — VERDICT r4 #3): the COMMIT SCHEME above is
 object-store-safe by construction (single-small-object commit, no
@@ -83,9 +85,6 @@ class StorageClient:
         object store: a single PUT)."""
         raise NotImplementedError
 
-    def delete(self, path: str) -> None:
-        raise NotImplementedError
-
     def delete_tree(self, path: str) -> None:
         raise NotImplementedError
 
@@ -93,8 +92,8 @@ class StorageClient:
         raise NotImplementedError
 
     def canonical(self, path: str) -> str:
-        """Resolve to the canonical form used for containment checks
-        (POSIX: realpath; object store: the key itself)."""
+        """Resolve to the canonical form recorded as a work_dir's input
+        identity (POSIX: realpath; object store: the key itself)."""
         raise NotImplementedError
 
 
@@ -131,9 +130,6 @@ class LocalFS(StorageClient):
         finally:
             os.close(dfd)
 
-    def delete(self, path: str) -> None:
-        os.remove(path)
-
     def delete_tree(self, path: str) -> None:
         import shutil
 
@@ -161,63 +157,15 @@ def run_incremental(
 
     Returns the number of micro-batches executed this invocation.
     Re-invoking after new files land processes ONLY the new files
-    (checkpointed source offsets).
+    (checkpointed source offsets). A work_dir with folded batches whose
+    _chk is missing or belongs to another query is refused
+    (_require_chk_binding), never adopted.
     """
     fs = fs or LOCAL_FS
     fs.makedirs(work_dir)
     _check_config_hash(work_dir, cfg, fs)
     _check_input_dir(work_dir, scenes_dir, fs)
-    man = _read_manifest(work_dir, fs)
-    if man["folded"]:
-        qid = _chk_query_id(work_dir, fs)
-        if qid is None or (man["chk_id"] is not None and qid != man["chk_id"]):
-            raise ValueError(
-                f"work_dir {work_dir} has compacted (folded) batches but its "
-                "streaming checkpoint (_chk) is missing or belongs to a "
-                "different query — replayed input would reuse folded batch "
-                "ids and be silently dropped. Restore the original _chk or "
-                "start a fresh work_dir."
-            )
-        if man["chk_id"] is None:
-            # legacy-migrated manifest that never learned its offset
-            # log's identity: a _chk RECREATED by a different query
-            # after migration would restart batch ids at 0 — exactly
-            # the silent-skip this guard exists to prevent (ADVICE r3).
-            # Adopt the observed qid only when (a) its offset log
-            # covers every folded batch id (sequential ids → coverage
-            # = max recorded offset >= max folded id) AND (b) its
-            # file-source log shows each folded batch was assigned
-            # from THIS scenes_dir — id coverage alone would accept a
-            # checkpoint restored from a sibling run over different
-            # input, whose seen-files set would then suppress delivery
-            # of files this work_dir never processed (r4 review).
-            odir = os.path.join(work_dir, "_chk", "offsets")
-            recorded = [
-                int(f) for f in (
-                    fs.listdir(odir) if fs.isdir(odir) else []
-                ) if f.isdigit()
-            ]
-            if not recorded or max(recorded) < max(man["folded"]):
-                raise ValueError(
-                    f"work_dir {work_dir} has folded batches up to "
-                    f"{max(man['folded'])} but the _chk offset log only "
-                    f"covers up to {max(recorded) if recorded else 'none'}"
-                    " — this checkpoint did not assign the folded batch "
-                    "ids, so replayed input would recycle them and be "
-                    "silently dropped. Restore the original _chk or "
-                    "start a fresh work_dir."
-                )
-            if not _sources_log_covers(work_dir, man["folded"], scenes_dir, fs):
-                raise ValueError(
-                    f"work_dir {work_dir}'s _chk file-source log does "
-                    "not show the folded batch ids being assigned from "
-                    f"{scenes_dir} — the checkpoint appears to belong "
-                    "to a different input/run; adopting it would "
-                    "silently skip input. Restore the original _chk or "
-                    "start a fresh work_dir."
-                )
-            man["chk_id"] = qid
-            _write_manifest(work_dir, man, fs)
+    _require_chk_binding(work_dir, _read_manifest(work_dir, fs), fs)
     schema = spark.read.parquet(scenes_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -308,23 +256,6 @@ def _read_manifest(work_dir: str, fs: StorageClient = LOCAL_FS) -> dict:
     p = _manifest_path(work_dir)
     if fs.exists(p):
         return _json.loads(fs.read_text(p))
-    # migrate a work_dir compacted by the pre-manifest scheme
-    # (compacted_batches.json + tiles_log/batch_id=-1): its folded set
-    # must keep protecting against redelivery, and batch_id=-1 stays a
-    # live batch dir until the next compaction folds it into gen=0
-    legacy = os.path.join(work_dir, "compacted_batches.json")
-    if fs.exists(legacy):
-        # chk_id stays None on migration (r5 review): stamping whatever
-        # _chk happens to be present would blindly trust an impostor
-        # checkpoint recreated by a different query/input — leaving it
-        # None routes the next run_incremental through the VALIDATED
-        # adoption path (offset coverage + sources lineage), which
-        # earns the id or refuses.
-        man = {"gen": None, "folded": sorted(_json.loads(fs.read_text(legacy))),
-               "chk_id": None}
-        _write_manifest(work_dir, man, fs)
-        fs.delete(legacy)
-        return man
     return {"gen": None, "folded": [], "chk_id": None}
 
 
@@ -338,91 +269,6 @@ def _write_manifest(
     import json as _json
 
     fs.write_text_atomic(_manifest_path(work_dir), _json.dumps(man, sort_keys=True))
-
-
-def _sources_log_covers(
-    work_dir: str, folded: list, scenes_dir: str,
-    fs: StorageClient = LOCAL_FS,
-) -> bool:
-    """True iff the _chk file-source log has an entry for every folded
-    batch id and every file it records lives under `scenes_dir` — the
-    lineage evidence that THIS checkpoint assigned the folded batches
-    from this work_dir's input (see the adoption guard)."""
-    import json as _json
-    from urllib.parse import unquote, urlparse
-
-    sdir = os.path.join(work_dir, "_chk", "sources", "0")
-    root = fs.canonical(scenes_dir)
-    if not fs.isdir(sdir):
-        return False
-    # Spark compacts this log every N batches into "<n>.compact" files
-    # that carry ALL entries up to n (older per-batch files are GC'd),
-    # so a batch id resolves to its own file or the first compact at
-    # or past it — a legitimate old checkpoint must not be refused
-    # just because its early per-batch files were compacted away.
-    names = fs.listdir(sdir)
-    compacts = sorted(
-        int(n.split(".")[0]) for n in names if n.endswith(".compact")
-    )
-
-    def _entries(bid: int):
-        """(covered, json_lines) for one batch id. `covered` means the
-        log ACCOUNTS for the batch — its own per-batch file exists, or a
-        compact at/past it does — even when it records zero new files (a
-        zero-new-files micro-batch writes a log file holding only the
-        'v1' header; that is positive evidence of this checkpoint's
-        lineage, not a reason to refuse adoption — ADVICE r4)."""
-        if str(bid) in names:
-            return True, [
-                ln.strip()
-                for ln in fs.read_text(
-                    os.path.join(sdir, str(bid))
-                ).splitlines()
-                if ln.strip().startswith("{")
-            ]
-        for c in compacts:
-            if c >= bid:
-                out = []
-                text = fs.read_text(os.path.join(sdir, f"{c}.compact"))
-                for line in text.splitlines():
-                    line = line.strip()
-                    if not line.startswith("{"):
-                        continue  # "v1" header
-                    try:
-                        if _json.loads(line).get("batchId") == bid:
-                            out.append(line)
-                    except ValueError:
-                        continue
-                return True, out
-        return False, []  # no evidence for this batch id
-
-    for bid in folded:
-        covered, lines = _entries(int(bid))
-        if not covered:
-            return False
-        for line in lines:
-            try:
-                p = _json.loads(line).get("path", "")
-            except ValueError:
-                return False
-            # normalize the RECORDED uri and the root with the SAME
-            # convention (r5 review): strip the scheme from the record
-            # only when the root is scheme-less (the local case); when
-            # the root itself is URI-form (object store / file: URI),
-            # compare the full uris — stripping only one side made
-            # adoption always refuse. Separator is "/" (these are
-            # Hadoop/object-store keys, never os.sep-dependent).
-            root_is_uri = "://" in root or root.startswith("file:")
-            if ("://" in p or p.startswith("file:")) and not root_is_uri:
-                # unquote AFTER extracting the path (r6 review): Spark
-                # percent-encodes the recorded URI ('my scenes' →
-                # 'my%20scenes'), and comparing the encoded form to the
-                # raw filesystem root made adoption always refuse for
-                # any input dir with a URI-escapable character
-                p = unquote(urlparse(p).path)
-            if not fs.canonical(p).startswith(root.rstrip("/") + "/"):
-                return False
-    return True
 
 
 def _committed_batches(
@@ -470,6 +316,26 @@ def _chk_query_id(
     return _json.loads(fs.read_text(meta)).get("id")
 
 
+def _require_chk_binding(
+    work_dir: str, man: dict, fs: StorageClient
+) -> None:
+    """The one lost-checkpoint guard of both streaming entry points.
+    Folded batch ids only protect redelivery under the OFFSET LOG that
+    named them: a missing or recreated _chk restarts batch ids at 0, so
+    replayed input would reuse folded ids and be silently skipped.
+    Compaction always records a non-None chk_id (_manifest_chk_id), so
+    one comparison covers a missing _chk, an impostor _chk and an
+    unbound manifest alike."""
+    if man["folded"] and _chk_query_id(work_dir, fs) != man["chk_id"]:
+        raise ValueError(
+            f"work_dir {work_dir} has compacted (folded) batches but its "
+            "streaming checkpoint (_chk) is missing or belongs to a "
+            "different query — replayed input would reuse folded batch "
+            "ids and be silently dropped. Restore the original _chk or "
+            "start a fresh work_dir."
+        )
+
+
 def _folded_batches(
     work_dir: str, fs: StorageClient = LOCAL_FS
 ) -> set[int]:
@@ -487,8 +353,10 @@ def _manifest_chk_id(
 ) -> str | None:
     """The chk_id to stamp into a compaction manifest. The recorded id
     binds the folded-batch set to the offset log that NAMED those ids;
-    adopting the current _chk's id is only legitimate when none was
-    recorded yet. Overwriting a mismatched one (r6 review — the old
+    taking the current _chk's id is only legitimate when none was
+    recorded yet, and refused when there is no _chk to take it from —
+    a folded set bound to no query would pass _require_chk_binding
+    against any later _chk-less replay. Overwriting a mismatched one (r6 review — the old
     `current or recorded` expression did exactly that) would launder an
     impostor checkpoint past run_incremental's replay guard: fold under
     query A, recreate _chk as query B, compact → manifest says B, the
@@ -497,6 +365,12 @@ def _manifest_chk_id(
     run-side guard."""
     qid = _chk_query_id(work_dir, fs)
     if man["chk_id"] is None:
+        if qid is None:
+            raise ValueError(
+                f"work_dir {work_dir} has no streaming checkpoint "
+                "(_chk/metadata) to bind the folded batch ids to — "
+                "compact only a work_dir its stream has run in."
+            )
         return qid
     if qid is not None and qid != man["chk_id"]:
         raise ValueError(
@@ -628,7 +502,7 @@ def _named_batch_dirs(
 # with the state for the trickle/late-file case to stay O(batch
 # keys × bucket rows); a batch whose key count exceeds P touches
 # every bucket and degrades gracefully to the r6 full scan.
-DEDUP_BAND_BUCKETS = 64  # floor (also the legacy default)
+DEDUP_BAND_BUCKETS = 64  # floor
 DEDUP_BAND_BUCKET_ROWS = 1 << 20  # target rows/bucket (~tens of MB files)
 DEDUP_BAND_BUCKETS_MAX = 1 << 16  # file-count ceiling per generation
 # above this many touched buckets, prune with a broadcast join on the
@@ -644,12 +518,10 @@ def _band_bucket_col(p: int):
 
 def _read_prev_bands(spark, work_dir, fs, before_batch, nb):
     """The batch handler's view of the previously persisted band state
-    (compacted generation + earlier non-folded batch partitions),
-    PRUNED to the storage buckets this batch touches when the
-    compacted generation is bucket-partitioned (legacy flat
-    generations read whole — detected by the absence of the _bucket
-    partition column, so pre-r7 work_dirs keep working). Returns None
-    when no previous state exists."""
+    (compacted generation + earlier non-folded batch partitions), with
+    the bucket-partitioned compacted generation PRUNED to the storage
+    buckets this batch touches. Returns None when no previous state
+    exists."""
     from pyspark.sql import functions as F
 
     man = _read_manifest(work_dir, fs)
@@ -659,28 +531,26 @@ def _read_prev_bands(spark, work_dir, fs, before_batch, nb):
         comp = spark.read.parquet(
             os.path.join(work_dir, "bands_compacted", f"gen={man['gen']}")
         )
-        if "_bucket" in comp.columns:
-            p = int(man.get("band_buckets") or DEDUP_BAND_BUCKETS)
-            buckets = nb.select(_band_bucket_col(p).alias("_bucket"))
-            touched = sorted(
-                r["_bucket"] for r in buckets.distinct().collect()
+        p = int(man["band_buckets"])
+        buckets = nb.select(_band_bucket_col(p).alias("_bucket"))
+        touched = sorted(
+            r["_bucket"] for r in buckets.distinct().collect()
+        )
+        if len(touched) >= p:
+            pass  # every bucket touched — pruning is a no-op
+        elif len(touched) <= _DEDUP_ISIN_MAX:
+            comp = comp.filter(F.col("_bucket").isin(touched))
+        else:
+            comp = comp.join(
+                F.broadcast(
+                    spark.createDataFrame(
+                        [(int(b),) for b in touched], "_bucket int"
+                    )
+                ),
+                "_bucket",
+                "leftsemi",
             )
-            if len(touched) >= p:
-                pass  # every bucket touched — pruning is a no-op
-            elif len(touched) <= _DEDUP_ISIN_MAX:
-                comp = comp.filter(F.col("_bucket").isin(touched))
-            else:
-                comp = comp.join(
-                    F.broadcast(
-                        spark.createDataFrame(
-                            [(int(b),) for b in touched], "_bucket int"
-                        )
-                    ),
-                    "_bucket",
-                    "leftsemi",
-                )
-            comp = comp.drop("_bucket")
-        parts.append(comp)
+        parts.append(comp.drop("_bucket"))
     log_dir = os.path.join(work_dir, "bands_log")
     batch_paths = [
         os.path.join(log_dir, d)
@@ -760,7 +630,9 @@ def run_incremental_dedup(
     state — the arriving 1% of a corpus never re-shingles the other
     99%. Same manifest-machinery guarantees as run_incremental:
     per-batch overwrite partitions make foreachBatch redelivery
-    idempotent, and manifest-folded batch ids are skipped.
+    idempotent, manifest-folded batch ids are skipped, and a work_dir
+    whose _chk no longer matches its folded ids is refused
+    (_require_chk_binding).
 
     With ``max_bucket=None`` semantics are exhaustive: every pair
     surfaces exactly once — at the batch where its later member
@@ -839,23 +711,7 @@ def run_incremental_dedup(
                 "original dedup_config)."
             )
         fs.write_text_atomic(cap_file, cap)
-    man = _read_manifest(work_dir, fs)
-    if man["folded"]:
-        # the same silent-skip hazard run_incremental guards (r5
-        # review): folded batch ids only protect redelivery under the
-        # OFFSET LOG that named them — a missing/recreated _chk would
-        # replay all input under recycled ids and the folded-skip would
-        # drop the new documents' pairs with a success return
-        qid = _chk_query_id(work_dir, fs)
-        if qid is None or man["chk_id"] is None or qid != man["chk_id"]:
-            raise ValueError(
-                f"work_dir {work_dir} has compacted (folded) dedup "
-                "batches but its streaming checkpoint (_chk) is "
-                "missing or belongs to a different query — replayed "
-                "input would reuse folded batch ids and be silently "
-                "dropped. Restore the original _chk or start a fresh "
-                "work_dir."
-            )
+    _require_chk_binding(work_dir, _read_manifest(work_dir, fs), fs)
     schema = spark.read.parquet(docs_dir).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -1059,15 +915,13 @@ def compact_dedup_logs(
             if not live:
                 return 0
             if len(live) == 1 and not complete:
-                # nothing new to fold — still REWRITE when the bucket
-                # layout is stale (a legacy flat generation, or a
-                # bucket_rows target that now yields a different
-                # bucket count for the grown state): resizing the
-                # bucketing is exactly compaction's job, and skipping
-                # here would pin the layout chosen at the first
-                # compaction forever (r7).
-                df0 = spark.read.parquet(live[0])
-                rows0 = df0.count()
+                # nothing new to fold — still REWRITE when a
+                # bucket_rows target now yields a different bucket
+                # count for the grown state: resizing the bucketing
+                # is exactly compaction's job, and skipping here would
+                # pin the layout chosen at the first compaction
+                # forever (r7).
+                rows0 = spark.read.parquet(live[0]).count()
                 target_p = min(
                     DEDUP_BAND_BUCKETS_MAX,
                     max(
@@ -1075,9 +929,7 @@ def compact_dedup_logs(
                         -(-rows0 // max(bucket_rows, 1)),
                     ),
                 )
-                if "_bucket" in df0.columns and (
-                    int(man.get("band_buckets") or 0) == target_p
-                ):
+                if int(man["band_buckets"]) == target_p:
                     return 0
         gen_dir = os.path.join(
             work_dir, f"{log}_compacted", f"gen={new_gen}"

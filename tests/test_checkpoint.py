@@ -244,6 +244,49 @@ def test_torn_snapshot_manifest_degrades_not_crashes(spark, tmp_path):
     assert catalog.read_snapshot_manifest(spark, src) is not None
 
 
+def test_snapshot_manifest_outage_with_failing_probe_raises(monkeypatch):
+    """(ADVICE r6) Both manifest reads fail with a non-corruption IO
+    error AND the existence probe raises too: absence can no longer be
+    told apart from an outage, so the read must raise, not return None
+    (which would let write_table(mode='ignore') re-commit over a
+    healthy manifest)."""
+    import types
+
+    import pytest
+
+    from mosaic_engine import catalog
+
+    class OutageFS:
+        def __init__(self):
+            self.probes = 0
+
+        def exists(self, _path):
+            self.probes += 1
+            if self.probes > 1:
+                raise IOError("exists: connection reset")
+            return True
+
+        def open(self, _path):
+            raise IOError("open: service unavailable")
+
+    fake = OutageFS()
+    monkeypatch.setattr(catalog, "_fs_and_path", lambda s, loc: (fake, loc))
+    jvm = types.SimpleNamespace(
+        org=types.SimpleNamespace(
+            apache=types.SimpleNamespace(
+                hadoop=types.SimpleNamespace(
+                    fs=types.SimpleNamespace(Path=lambda p: p)
+                )
+            )
+        )
+    )
+    with pytest.raises(OSError, match="service unavailable"):
+        catalog.read_snapshot_manifest(
+            types.SimpleNamespace(_jvm=jvm), "/remote/tbl"
+        )
+    assert fake.probes == 2
+
+
 def test_lineage_and_guard_edges(spark, scenes_df, tmp_path):
     """(r5 review) Non-file inputs yield a never-matching lineage token
     (resume degrades to recompute, never serves stale data); a remote

@@ -644,9 +644,6 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     )
     assert ops.knn_index_load(spark, path).level == 5  # still gen 0
 
-    # a fake legacy (pre-generation) layout dir must be GC'd too: a
-    # migrated index otherwise leaks its corpus-sized dir forever (r6)
-    os.makedirs(os.path.join(path, "cent"))
     # a full re-save at a new level commits and supersedes
     ops.knn_index_save(ops.knn_index(scenes_df, level=6), path)
     loaded1 = ops.knn_index_load(spark, path)
@@ -654,8 +651,7 @@ def test_knn_index_save_generation_commit(spark, scenes_df, tmp_path):
     # post-commit GC keeps live + immediate predecessor (r6 review:
     # save(load(path), path) lazily READS the predecessor and the
     # loaded index keeps serving from it — deleting it at commit
-    # would break the index the caller still holds); the legacy bare
-    # dir is retired once a versioned predecessor exists
+    # would break the index the caller still holds)
     assert sorted(os.listdir(path)) == [
         "cent_g0", "cent_g1", "meta",
         "prep_g0", "prep_g1",

@@ -5,6 +5,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
+import pytest
 
 from mosaic_engine import datagen, mosaic as mz, streaming
 from mosaic_engine.ops import MosaicConfig
@@ -334,37 +335,14 @@ def test_compaction_survives_redelivery_and_crash(spark, tmp_path):
         streaming.run_incremental(spark, scenes_dir, cfg, work)
 
 
-def test_legacy_compacted_batches_migrates_to_manifest(tmp_path):
-    """A work_dir compacted by the pre-manifest scheme
-    (compacted_batches.json + tiles_log/batch_id=-1) keeps its folded
-    set on first read under the new scheme — redelivery protection and
-    the lost-checkpoint refusal must survive the upgrade."""
-    import json
-
-    work = str(tmp_path / "w")
-    os.makedirs(os.path.join(work, "tiles_log", "batch_id=-1"))
-    with open(os.path.join(work, "compacted_batches.json"), "w") as f:
-        json.dump([0, 1], f)
-    assert streaming._folded_batches(work) == {0, 1}
-    # migration is one-shot: legacy file replaced by the manifest
-    assert not os.path.exists(os.path.join(work, "compacted_batches.json"))
-    assert os.path.exists(streaming._manifest_path(work))
-    # the legacy compacted partition stays live (not in the folded set)
-    assert streaming._tiles_paths(work) == [
-        os.path.join(work, "tiles_log", "batch_id=-1")]
-
-
-def test_orphaned_manifest_adopts_or_refuses_checkpoint(spark, tmp_path):
-    """ADVICE r3: a manifest whose chk_id is None (legacy migration
-    while _chk was missing) must not trust ANY later _chk. Adopt the
-    observed query id only when its offset log provably covers every
-    folded batch id; refuse otherwise — a checkpoint recreated by a
-    different query restarts batch ids at 0 and would silently skip
-    new input."""
+def test_unbound_manifest_refuses_checkpoint(spark, tmp_path):
+    """A manifest with folded batch ids binds them to the query that
+    named them: a chk_id of None refuses even with the original _chk
+    intact (no checkpoint is adopted after the fact), and so does a
+    _chk recreated by a different query. Restoring the original
+    binding resumes processing."""
     import json
     import shutil
-
-    import pytest
 
     full = datagen.gen_scenes(n_scenes=40, paths=3, rows=3, seed=7)
     scenes_dir = str(tmp_path / "scenes")
@@ -378,76 +356,31 @@ def test_orphaned_manifest_adopts_or_refuses_checkpoint(spark, tmp_path):
     man = streaming._read_manifest(work)
     real_qid = man["chk_id"]
     assert real_qid
-    # simulate the legacy-migrated manifest that never learned its qid
-    man["chk_id"] = None
-    streaming._write_manifest(work, man)
-    # original _chk intact → its offsets cover the folded ids → the
-    # manifest adopts the qid and processing continues
     datagen.write_parquet(
         full.slice(0, 10), os.path.join(scenes_dir, "p2.parquet")
     )
-    assert streaming.run_incremental(spark, scenes_dir, cfg, work) >= 1
-    assert streaming._read_manifest(work)["chk_id"] == real_qid
 
-    # a RECREATED _chk from a different query whose offset log does NOT
-    # cover the folded ids → refusal before the stream ever starts
-    man = streaming._read_manifest(work)
-    man["chk_id"] = None
+    # unbound folded set, original _chk intact → refusal, manifest kept
+    streaming._write_manifest(work, {**man, "chk_id": None})
+    with pytest.raises(ValueError, match="folded"):
+        streaming.run_incremental(spark, scenes_dir, cfg, work)
+    assert streaming._read_manifest(work)["chk_id"] is None
+
+    # bound folded set, _chk recreated by a different query → refusal
     streaming._write_manifest(work, man)
     chk = os.path.join(work, "_chk")
     real_chk = chk + ".bak"
     shutil.move(chk, real_chk)
-    os.makedirs(os.path.join(chk, "offsets"))
+    os.makedirs(chk)
     with open(os.path.join(chk, "metadata"), "w") as f:
         json.dump({"id": "imposter"}, f)
-    with open(os.path.join(chk, "offsets", "0"), "w") as f:
-        f.write("v1")
-    with pytest.raises(ValueError, match="offset log"):
+    with pytest.raises(ValueError, match="folded"):
         streaming.run_incremental(spark, scenes_dir, cfg, work)
 
-    # a FOREIGN _chk whose batch ids DO cover the folded set but whose
-    # file-source log shows the batches were assigned from a different
-    # input directory → refusal on lineage, not just id coverage
-    # (r4 review: id coverage alone would adopt a sibling run's
-    # checkpoint and silently suppress this work_dir's own input)
-    for bid in (0, 1, 2):
-        with open(os.path.join(chk, "offsets", str(bid)), "w") as f:
-            f.write("v1")
-    os.makedirs(os.path.join(chk, "sources", "0"))
-    for bid in (0, 1, 2):
-        with open(os.path.join(chk, "sources", "0", str(bid)), "w") as f:
-            f.write(
-                "v1\n"
-                + json.dumps(
-                    {"path": "file:///somewhere/else/p.parquet",
-                     "timestamp": 0, "batchId": bid}
-                )
-            )
-    with pytest.raises(ValueError, match="file-source log"):
-        streaming.run_incremental(spark, scenes_dir, cfg, work)
-
-    # restoring the ORIGINAL _chk makes adoption succeed again (its
-    # sources entries point under scenes_dir) — and it still succeeds
-    # after Spark-style log compaction replaces the per-batch sources
-    # files with one "<n>.compact" carrying all entries
+    # the original _chk restored → the new file processes
     shutil.rmtree(chk)
     shutil.move(real_chk, chk)
-    srcdir = os.path.join(chk, "sources", "0")
-    per_batch = sorted(
-        f for f in os.listdir(srcdir) if f.isdigit()
-    )
-    lines = ["v1"]
-    for f in per_batch:
-        with open(os.path.join(srcdir, f)) as fh:
-            lines += [l.strip() for l in fh if l.strip().startswith("{")]
-        os.remove(os.path.join(srcdir, f))
-    with open(os.path.join(srcdir, f"{max(map(int, per_batch))}.compact"),
-              "w") as fh:
-        fh.write("\n".join(lines))
-    man = streaming._read_manifest(work)
-    man["chk_id"] = None
-    streaming._write_manifest(work, man)
-    assert streaming.run_incremental(spark, scenes_dir, cfg, work) == 0
+    assert streaming.run_incremental(spark, scenes_dir, cfg, work) >= 1
     assert streaming._read_manifest(work)["chk_id"] == real_qid
 
 
@@ -482,9 +415,6 @@ class MemFS(streaming.StorageClient):
     def write_text_atomic(self, p, text):
         self.files[self._key(p)] = text
 
-    def delete(self, p):
-        del self.files[self._key(p)]
-
     def delete_tree(self, p):
         k = self._key(p)
         for dead in [x for x in self.files if x == k or x.startswith(k + "/")]:
@@ -502,8 +432,6 @@ def test_bookkeeping_runs_through_storage_seam():
     through the injected StorageClient: run it against MemFS paths that
     cannot resolve on the local filesystem and assert the real FS is
     never touched."""
-    import json
-
     fs = MemFS()
     work = "/mem/work"
     assert not os.path.exists("/mem")  # the escape canary
@@ -512,18 +440,6 @@ def test_bookkeeping_runs_through_storage_seam():
     streaming._write_manifest(work, {"gen": 1, "folded": [0, 2], "chk_id": "q"}, fs)
     assert streaming._read_manifest(work, fs)["gen"] == 1
     assert streaming._folded_batches(work, fs) == {0, 2}
-
-    # legacy migration consumes the old file through the seam
-    legacy_work = "/mem/legacy"
-    fs.files[os.path.join(legacy_work, "compacted_batches.json")] = "[3, 1]"
-    fs.files[os.path.join(legacy_work, "_chk", "metadata")] = json.dumps(
-        {"id": "qid-7"}
-    )
-    man = streaming._read_manifest(legacy_work, fs)
-    # migration leaves chk_id None (r5 review): the present _chk could
-    # be an impostor; the validated adoption path must earn the id
-    assert man == {"gen": None, "folded": [1, 3], "chk_id": None}
-    assert os.path.join(legacy_work, "compacted_batches.json") not in fs.files
 
     # config-hash guard through the seam
     cfg = MosaicConfig(quadkey_zoom=7)
@@ -548,22 +464,42 @@ def test_bookkeeping_runs_through_storage_seam():
     assert streaming._batch_dirs(work, fs) == []  # folded dirs GC'd
     assert not fs.isdir(os.path.join(work, "tiles_compacted", "gen=0"))
 
-    # _chk lineage evidence through the seam, incl. the zero-new-files
-    # batch whose log file holds only the 'v1' header (ADVICE r4)
-    chk = os.path.join(work, "_chk", "sources", "0")
-    scenes = "/mem/scenes"
-    entry = json.dumps({"path": scenes + "/p1.parquet", "batchId": 0})
-    fs.files[os.path.join(chk, "0")] = "v1\n" + entry + "\n"
-    fs.files[os.path.join(chk, "2")] = "v1\n"  # zero-new-files batch
-    assert streaming._sources_log_covers(work, [0, 2], scenes, fs)
-    # a file outside scenes_dir refuses adoption
-    bad = json.dumps({"path": "/mem/other/p9.parquet", "batchId": 5})
-    fs.files[os.path.join(chk, "5")] = "v1\n" + bad + "\n"
-    assert not streaming._sources_log_covers(work, [0, 2, 5], scenes, fs)
-    # an unaccounted batch id refuses adoption
-    assert not streaming._sources_log_covers(work, [0, 9], scenes, fs)
-
     assert not os.path.exists("/mem")  # nothing escaped to the real FS
+
+
+@pytest.mark.parametrize("entry", ["run_incremental", "run_incremental_dedup"])
+def test_lost_checkpoint_refused_before_spark(entry):
+    """Both streaming entry points share ONE lost-checkpoint guard: a
+    manifest with folded batches recorded under query "q" refuses a
+    missing _chk/metadata and an impostor one before Spark is touched
+    (spark=None proves it); with the recorded id the guard passes and
+    the call reaches Spark."""
+    import json
+
+    fs = MemFS()
+    work = "/mem/work"
+    streaming._write_manifest(
+        work, {"gen": 0, "folded": [0], "chk_id": "q"}, fs
+    )
+    if entry == "run_incremental":
+        def call():
+            return streaming.run_incremental(
+                None, "/mem/in", MosaicConfig(quadkey_zoom=7), work, fs=fs
+            )
+    else:
+        def call():
+            return streaming.run_incremental_dedup(None, "/mem/in", work, fs=fs)
+
+    meta = os.path.join(work, "_chk", "metadata")
+    with pytest.raises(ValueError, match="folded"):
+        call()  # _chk/metadata missing
+    fs.files[meta] = json.dumps({"id": "imposter"})
+    with pytest.raises(ValueError, match="folded"):
+        call()
+    fs.files[meta] = json.dumps({"id": "q"})
+    with pytest.raises(AttributeError):
+        call()  # guard passed: next stop is spark.read on None
+    assert not os.path.exists("/mem")
 
 
 def test_incremental_dedup_matches_batch(spark, tmp_path):
@@ -854,8 +790,9 @@ def test_compactor_refuses_mismatched_chk_id(tmp_path):
     recorded chk_id with a different current _chk's id — that would
     launder an impostor checkpoint past run_incremental's replay guard
     and let replayed input be silently dropped under recycled folded
-    ids. Mismatch refuses; adoption is only legal when no id was
-    recorded; an absent _chk keeps the recorded id."""
+    ids. Mismatch refuses; taking the current id is only legal when
+    none was recorded and a _chk exists; an absent _chk keeps the
+    recorded id."""
     import json
 
     import pytest
@@ -886,28 +823,11 @@ def test_compactor_refuses_mismatched_chk_id(tmp_path):
     set_qid("imposter")
     with pytest.raises(ValueError, match="wrong offset log"):
         streaming._manifest_chk_id(work, {"chk_id": "qA"}, streaming.LOCAL_FS)
-
-
-def test_sources_log_covers_unquotes_uris(tmp_path):
-    """(r6 review) Spark percent-encodes recorded source URIs; the
-    adoption check must compare the DECODED path or an input dir with
-    any URI-escapable character is always refused."""
-    import json
-
-    scenes = str(tmp_path / "my scenes")
-    os.makedirs(scenes)
-    work = str(tmp_path / "work")
-    sdir = os.path.join(work, "_chk", "sources", "0")
-    os.makedirs(sdir)
-    rec = json.dumps(
-        {
-            "path": "file:" + scenes.replace(" ", "%20") + "/p1.parquet",
-            "batchId": 0,
-        }
-    )
-    with open(os.path.join(sdir, "0"), "w") as f:
-        f.write("v1\n" + rec + "\n")
-    assert streaming._sources_log_covers(work, [0], scenes)
+    # nothing recorded AND no _chk -> refuse: a folded set bound to no
+    # query would pass the run-side guard on any later _chk-less replay
+    os.remove(os.path.join(chk, "metadata"))
+    with pytest.raises(ValueError, match="no streaming checkpoint"):
+        streaming._manifest_chk_id(work, {"chk_id": None}, streaming.LOCAL_FS)
 
 
 def test_incremental_dedup_refuses_max_bucket_drift(spark, tmp_path):
